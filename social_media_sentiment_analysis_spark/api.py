@@ -24,12 +24,11 @@ serving layers (REST, notebooks) collect at the edge.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.sentiment import sentiment_enrich
+from .sources.layout import absent_rows
 
 
 class SentimentEngine:
@@ -65,11 +64,7 @@ class SentimentEngine:
             enriched = enriched.withColumn(
                 "processed_at",
                 F.current_timestamp().cast("timestamp_ntz"))
-        fresh = enriched.dropDuplicates([self.key_col])
-        if os.path.isdir(self.store_path):
-            existing = self.spark.read.parquet(self.store_path) \
-                .select(self.key_col)
-            fresh = fresh.join(existing, on=self.key_col, how="left_anti")
+        fresh = absent_rows(enriched, self.store_path, self.key_col)
         added = fresh.count()
         if added:
             fresh.write.mode("append").parquet(self.store_path)

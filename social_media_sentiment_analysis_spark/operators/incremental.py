@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.batch import target_exists
+from ..sources.layout import overwrite_partitions
 
 # mergeable state columns of the daily rollup
 _STATE = ["n_events", "sum_value", "min_value", "max_value"]
@@ -77,10 +78,8 @@ def refresh_daily_rollup(spark: SparkSession, path: str,
                                delta)
     else:  # first build: nothing persisted yet
         merged = delta
-    (merged.select("event_type", *_STATE, "day")
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")  # scoped to this write
-     .partitionBy("day").parquet(path))
+    overwrite_partitions(merged.select("event_type", *_STATE, "day"), path,
+                         ("day",))
     delta.unpersist()
     return sorted(touched)
 

@@ -382,17 +382,16 @@ def q_streaming_dedup_embedding(spark: SparkSession,
 
     from ..sources.batch import load_table_stream
     from ..streaming.sinks import (
-        embedding_dedup_sink, read_embedding_flags,
+        embedding_dedup_sink, read_embedding_flags, run_available_now,
     )
 
     root = tempfile.mkdtemp(prefix="embdedup_")
     try:
         src = load_table_stream(spark, sf_dir, "embeddings") \
             .select("vec_id", "label", "embedding")
-        q = (embedding_dedup_sink(src, f"{root}/store", f"{root}/ckpt",
-                                  threshold=_EMB_SIM_THRESHOLD)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        run_available_now(embedding_dedup_sink(
+            src, f"{root}/store", f"{root}/ckpt",
+            threshold=_EMB_SIM_THRESHOLD))
         res = (read_embedding_flags(spark, f"{root}/store")
                .select("a_id", "b_id", "cosine")
                .localCheckpoint(eager=True))
@@ -477,7 +476,7 @@ def q_streaming_dedup_embedding_lsh(spark: SparkSession,
 
     from ..sources.batch import load_table_stream
     from ..streaming.sinks import (
-        embedding_dedup_sink, read_embedding_flags,
+        embedding_dedup_sink, read_embedding_flags, run_available_now,
     )
 
     root = tempfile.mkdtemp(prefix="embdeduplsh_")
@@ -486,11 +485,9 @@ def q_streaming_dedup_embedding_lsh(spark: SparkSession,
                .select("vec_id", "embedding")
                .withColumn("bucket", sim.hyperplane_bucket(
                    F.col("embedding"), _LSH_DIM, _LSH_BITS)))
-        q = (embedding_dedup_sink(src, f"{root}/store", f"{root}/ckpt",
-                                  block_col="bucket",
-                                  threshold=_EMB_SIM_THRESHOLD)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        run_available_now(embedding_dedup_sink(
+            src, f"{root}/store", f"{root}/ckpt", block_col="bucket",
+            threshold=_EMB_SIM_THRESHOLD))
         res = (read_embedding_flags(spark, f"{root}/store")
                .select("a_id", "b_id", "cosine")
                .localCheckpoint(eager=True))
@@ -554,18 +551,17 @@ def q_streaming_dedup_embedding_multiband(spark: SparkSession,
     from ..sources.batch import load_table_stream
     from ..streaming.sinks import (
         embedding_dedup_multiband_sink, read_embedding_flags,
+        run_available_now,
     )
 
     root = tempfile.mkdtemp(prefix="embdedupmb_")
     try:
         src = (load_table_stream(spark, sf_dir, "embeddings")
                .select("vec_id", "embedding"))
-        q = (embedding_dedup_multiband_sink(
-                src, f"{root}/store", f"{root}/ckpt", dim=_LSH_DIM,
-                bands=_MB_BANDS, band_bits=_MB_BITS,
-                threshold=_EMB_SIM_THRESHOLD)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        run_available_now(embedding_dedup_multiband_sink(
+            src, f"{root}/store", f"{root}/ckpt", dim=_LSH_DIM,
+            bands=_MB_BANDS, band_bits=_MB_BITS,
+            threshold=_EMB_SIM_THRESHOLD))
         res = (read_embedding_flags(spark, f"{root}/store")
                .select("a_id", "b_id", "cosine")
                .localCheckpoint(eager=True))
@@ -2643,17 +2639,15 @@ def q_streaming_reservoir_sample(spark: SparkSession,
 
     from ..sources.batch import load_table_stream
     from ..streaming.sinks import (
-        read_reservoir_sample, reservoir_sample_sink,
+        read_reservoir_sample, reservoir_sample_sink, run_available_now,
     )
 
     root = tempfile.mkdtemp(prefix="reservoir_")
     try:
         src = load_table_stream(spark, sf_dir, "documents") \
             .select("doc_id", "source", "lang", "n_chars")
-        q = (reservoir_sample_sink(src, f"{root}/sample", f"{root}/ckpt",
-                                   k=_RESERVOIR_K)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        run_available_now(reservoir_sample_sink(
+            src, f"{root}/sample", f"{root}/ckpt", k=_RESERVOIR_K))
         res = read_reservoir_sample(
             spark, f"{root}/sample").localCheckpoint(eager=True)
     finally:
@@ -2791,7 +2785,7 @@ def q_streaming_heavy_hitters(spark: SparkSession,
         DEFAULT_DEPTH, DEFAULT_WIDTH, cms_estimate,
     )
     from ..sources.batch import load_table_stream
-    from ..streaming.sinks import cms_sink, read_cms
+    from ..streaming.sinks import cms_sink, read_cms, run_available_now
 
     word_arr = F.filter(F.split(F.lower("text"), "[^a-z]+"),
                         lambda t: t != F.lit(""))
@@ -2810,10 +2804,9 @@ def q_streaming_heavy_hitters(spark: SparkSession,
             src_words = (load_table_stream(spark, sf_dir, "documents")
                          .filter(F.col("lang") == "en")
                          .select(F.explode(word_arr).alias("word")))
-            q = (cms_sink(src_words, "word", f"{root}/cms", f"{root}/ckpt",
-                          depth=DEFAULT_DEPTH, width=DEFAULT_WIDTH)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
+            run_available_now(cms_sink(
+                src_words, "word", f"{root}/cms", f"{root}/ckpt",
+                depth=DEFAULT_DEPTH, width=DEFAULT_WIDTH))
             return read_cms(spark, f"{root}/cms").localCheckpoint(eager=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)

@@ -10,12 +10,21 @@ bucketed on their most-joined key at ingest.
 
 Bucketing requires the table catalog (`saveAsTable`) — bucket metadata
 lives in the metastore, not the files.
+
+This module also owns the engine's plain-parquet commit protocol — the
+one place a table directory is swapped, a keyed store is probed for
+insert-if-absent, or a ``batch_id=`` partition is replaced:
+``staged_swap``, ``absent_rows`` and ``replace_batch_partition``.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .batch import target_exists
 
 
 def write_partitioned(df: DataFrame, path: str,
@@ -61,6 +70,80 @@ def write_range_sorted(df: DataFrame, path: str, sort_col: str,
     )
 
 
+@contextmanager
+def staged_swap(spark: SparkSession, path: str):
+    """Replace the table directory at ``path`` with whatever the body
+    writes to the yielded staging directory — the engine's one directory
+    commit, on the Hadoop filesystem of ``path`` (scheme-aware).
+
+    Protocol: on entry, if ``path`` is missing but a ``{path}.old-*``
+    sibling exists, an earlier swap crashed between its two renames and
+    the newest such snapshot IS the committed table — it is renamed back
+    before the body runs, so the body may read ``path``. On normal exit
+    the committed table is renamed aside to ``{path}.old-<tag>`` (never
+    deleted first: at every instant the target or a displaced snapshot
+    holds the full prior state), the staging directory is renamed in (if
+    that fails the old table is put back before raising), and the old
+    table plus any orphaned ``{path}.staging-*``/``{path}.old-*`` left by
+    earlier crashes are deleted. If the body raises, the staging directory
+    is deleted and ``path`` is left as it was. A concurrent reader can
+    still glitch between the two renames — the window transactional table
+    formats close with a manifest commit."""
+    import uuid
+
+    path = path.rstrip("/")
+    jvm, fs = _hadoop_fs(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    dst = Path(path)
+    if not fs.exists(dst):
+        displaced = fs.globStatus(Path(f"{path}.old-*")) or []
+        if displaced:
+            newest = max(displaced, key=lambda st: st.getModificationTime())
+            if not fs.rename(newest.getPath(), dst):
+                raise IOError(f"found displaced state {newest.getPath()} "
+                              f"but could not restore it to {path}")
+    tag = uuid.uuid4().hex[:8]
+    staging, old = Path(f"{path}.staging-{tag}"), Path(f"{path}.old-{tag}")
+    try:
+        yield str(staging)
+    except BaseException:
+        fs.delete(staging, True)
+        raise
+    if fs.exists(dst) and not fs.rename(dst, old):
+        raise IOError(f"failed to displace {path} for swap")
+    if not fs.rename(staging, dst):
+        if fs.exists(old):
+            fs.rename(old, dst)
+        raise IOError(f"failed to swap {staging} into {path}")
+    for pat in (f"{path}.staging-*", f"{path}.old-*"):
+        for st in fs.globStatus(Path(pat)) or []:
+            fs.delete(st.getPath(), True)
+
+
+def absent_rows(df: DataFrame, path: str, key_col: str) -> DataFrame:
+    """The rows of ``df`` whose ``key_col`` is not yet in the parquet store
+    at ``path`` (in-batch duplicates dropped first): insert-if-absent, the
+    reference's ``INSERT OR IGNORE`` on a UNIQUE key. Appending the result
+    is idempotent under replay. The store probe is scheme-aware
+    (``target_exists``), so ``file://``/``hdfs://`` stores are found."""
+    fresh = df.dropDuplicates([key_col])
+    if target_exists(df.sparkSession, path):
+        existing = df.sparkSession.read.parquet(path).select(key_col)
+        fresh = fresh.join(existing, on=key_col, how="left_anti")
+    return fresh
+
+
+def _parquet_file_sizes(spark: SparkSession, path: str) -> list[int]:
+    jvm, fs = _hadoop_fs(spark, path)
+    files = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
+    sizes = []
+    while files.hasNext():
+        st = files.next()
+        if st.getPath().getName().endswith(".parquet"):
+            sizes.append(st.getLen())
+    return sizes
+
+
 def compact_parquet(spark: SparkSession, path: str,
                     target_file_bytes: int = 128 * 1024 * 1024,
                     sort_col: str | None = None) -> tuple[int, int]:
@@ -76,35 +159,22 @@ def compact_parquet(spark: SparkSession, path: str,
     repartition + in-file sort so the rewrite also restores min/max
     clustering (see write_range_sorted).
 
-    The rewrite stages into a sibling directory and swaps on success, so
-    a crash mid-compaction never loses the original. (In production on
-    object stores, table formats do this swap transactionally; here the
-    local-FS rename stands in.)
+    The rewrite commits through ``staged_swap``, so a crash mid-compaction
+    never loses the original and the next call recovers from it.
     """
     import math
-    import os
-    import shutil
 
-    files = [os.path.join(dp, f)
-             for dp, _, fs in os.walk(path)
-             for f in fs if f.endswith(".parquet")]
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".__compacting__"
-    if sort_col is not None:
-        out = (df.repartitionByRange(n_out, F.col(sort_col))
-               .sortWithinPartitions(sort_col))
-    else:
-        out = df.coalesce(n_out)
-    out.write.mode("overwrite").parquet(staging)
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    n_after = len([f for dp, _, fs in os.walk(path)
-                   for f in fs if f.endswith(".parquet")])
-    return len(files), n_after
+    with staged_swap(spark, path) as staging:
+        sizes = _parquet_file_sizes(spark, path)
+        n_out = max(1, math.ceil(sum(sizes) / target_file_bytes))
+        df = spark.read.parquet(path)
+        if sort_col is not None:
+            out = (df.repartitionByRange(n_out, F.col(sort_col))
+                   .sortWithinPartitions(sort_col))
+        else:
+            out = df.coalesce(n_out)
+        out.write.parquet(staging)
+    return len(sizes), len(_parquet_file_sizes(spark, path))
 
 
 def overwrite_partitions(df: DataFrame, path: str,
@@ -125,6 +195,19 @@ def overwrite_partitions(df: DataFrame, path: str,
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy(*partition_cols)
      .parquet(path))
+
+
+def replace_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as the ``batch_id=`` partition of the plain-parquet
+    store at ``path`` — the streaming sinks' replay contract: stale
+    partitions at or above ``batch_id`` (a crashed attempt, or a
+    checkpoint-loss replay that re-batched differently) are swept first
+    (``drop_stale_partitions``), then the batch's own partition is
+    replaced by dynamic overwrite, so a replayed batch never double-counts
+    and never leaves a stale later partition behind."""
+    drop_stale_partitions(df.sparkSession, path, batch_id)
+    overwrite_partitions(df.withColumn("batch_id", F.lit(batch_id)), path,
+                         ("batch_id",))
 
 
 def write_zordered(df: DataFrame, path: str, col_a: str, col_b: str,
@@ -197,8 +280,7 @@ def apply_changes(spark: SparkSession, target_path: str, changes: DataFrame,
     At 100 TB the cost is proportional to the touched partitions — the
     same contract a Delta/Iceberg MERGE gives, expressed with the engine's
     own partition pruning. Caveat vs real table formats: no snapshot
-    isolation across partitions mid-write (the staged-swap trick in
-    ``compact_parquet`` covers single-directory atomicity).
+    isolation across partitions mid-write.
 
     **Precondition: ``partition_col`` is immutable per key** (the standard
     contract for partition-pruned merges — e.g. partition by creation
@@ -446,9 +528,9 @@ def compact_store(spark: SparkSession, location: str,
     BELOW the last committed id (the caller passes it — e.g. the
     checkpoint's next batch id) never collides with a replayed batch's
     own-partition overwrite, and -1 < every real id keeps the folded
-    history visible to every probe. The rewrite stages into a sibling
-    directory and swaps in on success (rename = commit), so a crash
-    mid-compaction leaves the original store intact.
+    history visible to every probe. The rewrite commits through
+    ``staged_swap``, so a crash mid-compaction leaves the original store
+    intact and the next call recovers it.
 
     ``sum_cols``: for DELTA stores whose probe SUMS per-key contributions
     (the winnow sink's ``(fp, n_docs)`` stats store), pass the additive
@@ -458,39 +540,33 @@ def compact_store(spark: SparkSession, location: str,
     by the monoid law: sum over deltas == sum over merged deltas. Only
     valid when every non-key, non-additive column is absent — the
     function raises otherwise rather than silently dropping data."""
-    import os
-    import shutil
     import uuid
 
     bc = _bucket_cols(bucket_cols)
-    table = open_store(spark, location, bc, n_buckets)
-    if table is None:
-        raise ValueError(f"no store at {location}")
-    parts_before = spark.sql(f"SHOW PARTITIONS {table}").count()
-    folded = spark.table(table).withColumn(
-        "batch_id",
-        F.when(F.col("batch_id") < upto_batch_id, F.lit(-1))
-        .otherwise(F.col("batch_id")).cast("int"))
-    if sum_cols:
-        extra = [c for c in folded.columns
-                 if c not in (*bc, *sum_cols, "batch_id")]
-        if extra:
-            raise ValueError(
-                f"compact_store(sum_cols=...) would drop columns {extra}; "
-                f"a delta store may only carry its key and additive cols")
-        folded = (folded.groupBy(*bc, "batch_id")
-                  .agg(*[F.sum(c).alias(c) for c in sum_cols]))
-    tag = uuid.uuid4().hex[:8]
-    staging = f"{location.rstrip('/')}.compacting-{tag}"
-    tmp_table = f"{table}_compact_{tag}"
-    (folded.write.partitionBy("batch_id")
-     .bucketBy(n_buckets, *bc).sortBy(*bc)
-     .option("path", staging).saveAsTable(tmp_table))
-    spark.sql(f"DROP TABLE {tmp_table}")     # external: files stay
-    old = f"{location.rstrip('/')}.old-{tag}"
-    os.rename(location, old)
-    os.rename(staging, location)             # swap = commit
-    shutil.rmtree(old)
+    with staged_swap(spark, location) as staging:
+        table = open_store(spark, location, bc, n_buckets)
+        if table is None:
+            raise ValueError(f"no store at {location}")
+        parts_before = spark.sql(f"SHOW PARTITIONS {table}").count()
+        folded = spark.table(table).withColumn(
+            "batch_id",
+            F.when(F.col("batch_id") < upto_batch_id, F.lit(-1))
+            .otherwise(F.col("batch_id")).cast("int"))
+        if sum_cols:
+            extra = [c for c in folded.columns
+                     if c not in (*bc, *sum_cols, "batch_id")]
+            if extra:
+                raise ValueError(
+                    f"compact_store(sum_cols=...) would drop columns "
+                    f"{extra}; a delta store may only carry its key and "
+                    f"additive cols")
+            folded = (folded.groupBy(*bc, "batch_id")
+                      .agg(*[F.sum(c).alias(c) for c in sum_cols]))
+        tmp_table = f"{table}_compact_{uuid.uuid4().hex[:8]}"
+        (folded.write.partitionBy("batch_id")
+         .bucketBy(n_buckets, *bc).sortBy(*bc)
+         .option("path", staging).saveAsTable(tmp_table))
+        spark.sql(f"DROP TABLE {tmp_table}")     # external: files stay
     # re-sync catalog partitions with the folded layout
     for r in spark.sql(f"SHOW PARTITIONS {table}").collect():
         spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({r[0]})")
@@ -596,7 +672,7 @@ def write_validated(df: DataFrame, path: str,
     The counts ride the write itself via ``observe`` (Observation
     accumulators aggregate map-side during the one pass that writes the
     files — no validation pre-scan, which at 100 TB would double the job).
-    Data stages into a sibling directory and swaps in only on success, so
+    Data stages through ``staged_swap`` and commits only on success, so
     a failed validation leaves the target untouched — the CHECK-constraint
     semantics table formats (Delta/Iceberg) give you, reconstructed for
     plain parquet.
@@ -604,9 +680,6 @@ def write_validated(df: DataFrame, path: str,
     Raises ``ValueError`` listing the violated constraints; the staging
     directory is removed either way.
     """
-    import shutil
-    import uuid
-
     from pyspark.sql import Observation
 
     if not constraints:
@@ -615,17 +688,11 @@ def write_validated(df: DataFrame, path: str,
             "df.write for unconditional persistence")
     obs = Observation()
     metrics = [F.count_if(~c).alias(name) for name, c in constraints.items()]
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    try:
-        df.observe(obs, metrics[0], *metrics[1:]) \
-            .write.mode("overwrite").parquet(staging)
+    with staged_swap(df.sparkSession, path) as staging:
+        df.observe(obs, metrics[0], *metrics[1:]).write.parquet(staging)
         counts = {name: int(obs.get[name]) for name in constraints}
         violated = {k: v for k, v in counts.items() if v > 0}
         if violated:
             raise ValueError(
                 f"CHECK constraints violated, write aborted: {violated}")
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.move(staging, path)
-        return counts
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    return counts

@@ -18,26 +18,6 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from ..sources.batch import target_exists as _target_exists  # noqa: E402
 
 
-def _restore_displaced(spark, path: str) -> bool:
-    """If a rename-aside swap crashed after displacing ``path`` to a
-    ``{path}.old-*`` sibling but before renaming the staging dir in, the
-    committed table still exists — displaced. Adopt the newest such
-    snapshot back into place. Returns True if a restore happened."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = dst.getFileSystem(conf)
-    cands = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{path}.old-*"))
-    if not cands:
-        return False
-    newest = max(cands, key=lambda st: st.getModificationTime())
-    if not fs.rename(newest.getPath(), dst):
-        raise IOError(
-            f"found displaced state {newest.getPath()} but could not "
-            f"restore it to {path}")
-    return True
-
-
 def jsonl_sink(df: DataFrame, path: str, checkpoint: str,
                partition_granularity: str = "yyyyMMdd_HH") -> DataStreamWriter:
     """S5 with the evident intent (hourly partitions — the reference's
@@ -67,13 +47,10 @@ def idempotent_parquet_sink(df: DataFrame, path: str, checkpoint: str,
     dependency-free. At very large scale the anti-join right side should be
     pruned to recent partitions — keys are time-clustered.)"""
 
+    from ..sources.layout import absent_rows
+
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = batch.dropDuplicates([key_col])
-        if _target_exists(spark, path):
-            existing = spark.read.parquet(path).select(key_col)
-            fresh = fresh.join(existing, on=key_col, how="left_anti")
-        fresh.write.mode("append").parquet(path)
+        absent_rows(batch, path, key_col).write.mode("append").parquet(path)
 
     return (
         df.writeStream.foreachBatch(upsert)
@@ -127,58 +104,26 @@ def upsert_parquet_sink(df: DataFrame, path: str, checkpoint: str,
     value per key.
 
     Plain-parquet realization: rewrite = (existing ∖ batch-keys) ∪ batch,
-    staged into a sibling directory and swapped in via the filesystem (no
-    driver-side collect — the rewrite is a distributed job however large
-    the aggregate grows). With a transactional format this is MERGE WHEN
-    MATCHED UPDATE / NOT MATCHED INSERT and only touched partitions
-    rewrite; the swap here is delete+rename, so a concurrent reader can
-    glitch in the tiny window between them — the contract table formats
-    close properly. Idempotent under batch replay: replaying batch N
-    rewrites the same rows with the same values."""
+    committed through ``sources/layout.py::staged_swap`` (no driver-side
+    collect — the rewrite is a distributed job however large the aggregate
+    grows; a crashed swap's displaced table is adopted by the next batch
+    instead of being treated as a first build). With a transactional
+    format this is MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT and only
+    touched partitions rewrite. Idempotent under batch replay: replaying
+    batch N rewrites the same rows with the same values."""
+
+    from ..sources.layout import staged_swap
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        import uuid
-
         spark = batch.sparkSession
         batch = batch.dropDuplicates(keys)
-        if not _target_exists(spark, path):
-            # a previous swap may have crashed between the two renames —
-            # the committed table would then sit in a displaced .old dir;
-            # adopt it instead of silently treating the replay as a first
-            # build (which would discard all accumulated state)
-            _restore_displaced(spark, path)
-        if _target_exists(spark, path):
-            existing = spark.read.parquet(path)
-            keep = existing.join(batch.select(*keys), on=keys,
-                                 how="left_anti")
-            out = keep.unionByName(batch)
-        else:
+        with staged_swap(spark, path) as staging:
             out = batch   # first batch: no target yet
-        tag = uuid.uuid4().hex[:8]
-        staging = f"{path}.staging-{tag}"
-        out.write.mode("overwrite").parquet(staging)  # reads old, writes new
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        dst = jvm.org.apache.hadoop.fs.Path(path)
-        src = jvm.org.apache.hadoop.fs.Path(staging)
-        old = jvm.org.apache.hadoop.fs.Path(f"{path}.old-{tag}")
-        fs = dst.getFileSystem(conf)
-        # rename-aside, never delete-then-rename: at every instant either
-        # the target or a displaced .old snapshot holds the full prior
-        # state, so a crash mid-swap is recoverable (see probe above)
-        if fs.exists(dst) and not fs.rename(dst, old):
-            raise IOError(f"failed to displace {path} for swap")
-        if not fs.rename(src, dst):
-            if fs.exists(old):
-                fs.rename(old, dst)   # restore before failing loudly
-            raise IOError(f"failed to swap {staging} into {path}")
-        fs.delete(old, True)
-        # the swap committed, so any leftover .staging-*/.old-* dirs are
-        # orphans from earlier crashed swaps: GC them
-        for pat in (f"{path}.staging-*", f"{path}.old-*"):
-            for st in fs.globStatus(
-                    jvm.org.apache.hadoop.fs.Path(pat)) or []:
-                fs.delete(st.getPath(), True)
+            if _target_exists(spark, path):
+                out = (spark.read.parquet(path)
+                       .join(batch.select(*keys), on=keys, how="left_anti")
+                       .unionByName(batch))
+            out.write.parquet(staging)
 
     return (
         df.writeStream.foreachBatch(upsert)
@@ -202,18 +147,16 @@ def fanout_sink(df: DataFrame, jsonl_path: str, table_path: str,
     keyed store's anti-join keeps the pair idempotent under replay.
     """
 
+    from ..sources.layout import absent_rows
+
     def fan_out(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         batch.persist()
         try:
             (batch.withColumn(
                 "hour", F.date_format(F.col(partition_col), "yyyyMMdd_HH"))
              .write.mode("append").partitionBy("hour").json(jsonl_path))
-            fresh = batch.dropDuplicates([key_col])
-            if _target_exists(spark, table_path):
-                existing = spark.read.parquet(table_path).select(key_col)
-                fresh = fresh.join(existing, on=key_col, how="left_anti")
-            fresh.write.mode("append").parquet(table_path)
+            absent_rows(batch, table_path, key_col) \
+                .write.mode("append").parquet(table_path)
         finally:
             batch.unpersist()
 
@@ -227,13 +170,11 @@ def fanout_sink(df: DataFrame, jsonl_path: str, table_path: str,
 def _write_batch_sketch(batch: DataFrame, batch_id: int, item_col: str,
                         path: str, depth: int, width: int) -> None:
     from ..operators.cms import cms_build
+    from ..sources.layout import replace_batch_partition
 
-    sketch = (cms_build(batch.select(item_col), item_col,
-                        depth=depth, width=width)
-              .withColumn("batch_id", F.lit(batch_id)))
-    (sketch.coalesce(1).write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(path))
+    sketch = cms_build(batch.select(item_col), item_col,
+                       depth=depth, width=width)
+    replace_batch_partition(sketch.coalesce(1), path, batch_id)
 
 
 def cms_sink(df: DataFrame, item_col: str, path: str, checkpoint: str,
@@ -242,14 +183,18 @@ def cms_sink(df: DataFrame, item_col: str, path: str, checkpoint: str,
 
     Each micro-batch builds its own ≤ depth×width-cell sketch
     (operators/cms.py) and writes it to a ``batch_id=`` partition with
-    dynamic partition overwrite — so batch replay REPLACES the partition
-    instead of double-counting: exactly-once sketch contents on top of
-    at-least-once delivery, the same idempotency recipe as the keyed sinks
-    but for an aggregate. The live sketch is the cell-wise sum over
-    partitions (``read_cms``) — the sketch's mergeability is what makes the
-    incremental form correct by construction. State per batch is bounded by
-    the sketch size, not the data; compact old partitions with
-    ``sources/layout.py::compact_parquet`` if batch count grows unwieldy.
+    ``replace_batch_partition`` — so batch replay REPLACES the partition
+    instead of double-counting, and a checkpoint-loss replay that
+    re-batches differently sweeps the stale later partitions: exactly-once
+    sketch contents on top of at-least-once delivery, the same idempotency
+    recipe as the keyed sinks but for an aggregate. The live sketch is the
+    cell-wise sum over partitions (``read_cms``) — the sketch's
+    mergeability is what makes the incremental form correct by
+    construction. State per batch is bounded by the sketch size, not the
+    data; fold old partitions into a ``batch_id=-1`` seed with
+    ``compact_flag_store`` (pure concatenation, so the cell sums are
+    unchanged) if batch count grows unwieldy — ``compact_parquet`` would
+    flatten the ``batch_id=`` layout the replay sweep relies on.
     """
 
     def update(batch: DataFrame, batch_id: int) -> None:
@@ -385,7 +330,7 @@ def near_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     """
     from ..operators.dedup import band_keys, minhash_signatures
     from ..sources.layout import (
-        drop_stale_partitions, replace_store_partition,
+        replace_batch_partition, replace_store_partition,
     )
 
     docs_path = f"{path}/docs"
@@ -417,12 +362,8 @@ def near_dedup_sink(df: DataFrame, path: str, checkpoint: str,
         # store it is appending to through this lineage
         kept_ids = (survivors_keys.select(id_col).distinct()
                     .join(losers, id_col, "left_anti").localCheckpoint())
-        drop_stale_partitions(spark, docs_path, batch_id)
-        kept = batch.join(kept_ids, id_col, "left_semi") \
-            .withColumn("batch_id", F.lit(batch_id))
-        (kept.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(docs_path))
+        replace_batch_partition(batch.join(kept_ids, id_col, "left_semi"),
+                                docs_path, batch_id)
         replace_store_partition(
             spark, keys.join(kept_ids, id_col, "left_semi"),
             bands_path, batch_id, ["band", "band_hash"],
@@ -484,7 +425,7 @@ def rewrite_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     """
     from ..operators.dedup import chunk_rows
     from ..sources.layout import (
-        drop_stale_partitions, replace_store_partition,
+        replace_batch_partition, replace_store_partition,
     )
 
     docs_path = f"{path}/docs"
@@ -523,12 +464,8 @@ def rewrite_dedup_sink(df: DataFrame, path: str, checkpoint: str,
                         F.coalesce(
                             F.sum(F.when(F.col("keep"), F.col("n_toks"))),
                             F.lit(0)).alias("kept_tokens"),
-                        rebuilt.alias("cleaned_text"))
-                   .withColumn("batch_id", F.lit(batch_id)))
-        drop_stale_partitions(spark, docs_path, batch_id)
-        (cleaned.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(docs_path))
+                        rebuilt.alias("cleaned_text")))
+        replace_batch_partition(cleaned, docs_path, batch_id)
         replace_store_partition(
             spark, marked.filter("keep").select("h").distinct(),
             fps_path, batch_id, "h", n_buckets=store_buckets)
@@ -597,18 +534,13 @@ def reservoir_sample_sink(df: DataFrame, path: str, checkpoint: str,
     grows unwieldy (a 1M-batch stream otherwise turns the k-row read
     into a 1M-partition listing).
     """
-    from ..sources.layout import drop_stale_partitions
+    from ..sources.layout import replace_batch_partition
 
     def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         top = (batch.dropDuplicates([id_col])
                .withColumn("__h", F.md5(F.col(id_col).cast("string")))
-               .orderBy("__h").limit(k)
-               .withColumn("batch_id", F.lit(batch_id)))
-        drop_stale_partitions(spark, path, batch_id)
-        (top.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(path))
+               .orderBy("__h").limit(k))
+        replace_batch_partition(top, path, batch_id)
 
     return (
         df.writeStream.foreachBatch(update)
@@ -649,12 +581,10 @@ def compact_reservoir_sample(spark: SparkSession, path: str,
     above it can ever replay, those partitions are left untouched, and
     -1 sorts below every real id so ``drop_stale_partitions``'s stale-
     future sweep (which only deletes ``>= from_batch_id`` for
-    non-negative ids) never touches the seed. The rewrite stages into a
-    sibling directory and swaps on success — a crash mid-fold never loses
-    data, though between the two renames of the swap the store is briefly
-    absent at ``path`` (it survives under ``.old-<tag>``; recovery is a
-    manual rename back — same pre-existing window as ``compact_store``).
-    Unlike the flag-store fold, even a full
+    non-negative ids) never touches the seed. The rewrite commits through
+    ``sources/layout.py::staged_swap`` — a crash mid-fold never loses
+    data, and the next fold recovers a displaced store. Unlike the
+    flag-store fold, even a full
     checkpoint-loss replay on top of a fold seed is harmless here: the
     read-side merge dedupes on the key and priorities are key-pure, so
     re-delivered rows change nothing (the sink's own idempotence
@@ -695,12 +625,7 @@ def compact_flag_store(spark: SparkSession, path: str,
     rediscovered pairs are the same pairs — but row multiplicity can
     double; restore exactly-once rows by clearing the fold seed first:
     ``drop_stale_partitions(spark, path, -1)`` (the exact-match branch)
-    before restarting from an empty checkpoint.
-
-    Crash window, stated precisely: the staged rewrite never loses data,
-    but between the swap's two renames the store is absent at ``path``
-    (readers/sinks fail until the ``.old-<tag>`` sibling is renamed back
-    by hand — the same recoverable window as ``compact_store``)."""
+    before restarting from an empty checkpoint."""
     return _fold_batch_partitions(
         spark, path, upto_batch_id,
         lambda df: df.coalesce(n_files))
@@ -712,24 +637,17 @@ def _fold_batch_partitions(spark: SparkSession, path: str,
     """Shared seed-fold: rewrite ``batch_id < upto_batch_id`` partitions
     (including any existing seed) as one ``batch_id=-1`` partition
     holding ``fold(slice)``, keep ``>= upto_batch_id`` partitions
-    byte-intact, stage into a sibling directory and swap on success."""
-    import os
-    import shutil
-    import uuid
+    byte-intact, committed through ``staged_swap``."""
+    from ..sources.layout import staged_swap
 
-    df = spark.read.parquet(path)
-    parts_before = df.select("batch_id").distinct().count()
-    folded = (fold(df.filter(F.col("batch_id") < upto_batch_id))
-              .withColumn("batch_id", F.lit(-1)))
-    keep = df.filter(F.col("batch_id") >= upto_batch_id)
-    tag = uuid.uuid4().hex[:8]
-    staging = f"{path.rstrip('/')}.compacting-{tag}"
-    (folded.unionByName(keep)
-     .write.partitionBy("batch_id").parquet(staging))
-    old = f"{path.rstrip('/')}.old-{tag}"
-    os.rename(path, old)
-    os.rename(staging, path)             # swap = commit
-    shutil.rmtree(old)
+    with staged_swap(spark, path) as staging:
+        df = spark.read.parquet(path)
+        parts_before = df.select("batch_id").distinct().count()
+        folded = (fold(df.filter(F.col("batch_id") < upto_batch_id))
+                  .withColumn("batch_id", F.lit(-1)))
+        keep = df.filter(F.col("batch_id") >= upto_batch_id)
+        (folded.unionByName(keep)
+         .write.partitionBy("batch_id").parquet(staging))
     parts_after = (spark.read.parquet(path)
                    .select("batch_id").distinct().count())
     return parts_before, parts_after
@@ -786,7 +704,7 @@ def winnow_containment_sink(df: DataFrame, path: str, checkpoint: str,
     """
     from ..queries.selection import winnowing_window_minima
     from ..sources.layout import (
-        drop_stale_partitions, replace_store_partition,
+        replace_batch_partition, replace_store_partition,
     )
 
     fps_path = f"{path}/fps"
@@ -832,14 +750,11 @@ def winnow_containment_sink(df: DataFrame, path: str, checkpoint: str,
                   .agg(F.count(F.lit(1)).alias("shared_fps"))
                   .select("doc_a", "doc_b", "shared_fps", "n_a", "n_b"))
         flags = within if flags is None else flags.unionByName(within)
-        drop_stale_partitions(spark, flags_path, batch_id)
-        (flags.withColumn("containment", F.round(contain, 4))
-         .filter(F.col("containment") >= threshold)
-         .select("doc_a", "doc_b", "shared_fps", "containment")
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(flags_path))
+        replace_batch_partition(
+            flags.withColumn("containment", F.round(contain, 4))
+            .filter(F.col("containment") >= threshold)
+            .select("doc_a", "doc_b", "shared_fps", "containment"),
+            flags_path, batch_id)
         replace_store_partition(spark, fps, fps_path, batch_id, "fp",
                                 n_buckets=store_buckets)
         replace_store_partition(
@@ -966,7 +881,7 @@ def embedding_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     """
     from ..functions.vectors import l2_norm, pair_cosine_lookup
     from ..sources.layout import (
-        drop_stale_partitions, replace_store_partition,
+        replace_batch_partition, replace_store_partition,
     )
 
     vec_path = f"{path}/vectors"
@@ -1026,11 +941,7 @@ def embedding_dedup_sink(df: DataFrame, path: str, checkpoint: str,
                  .withColumn("cosine", F.round(F.col("cosine"), 4))
                  .filter(F.col("cosine") >= threshold)
                  .select("a_id", "b_id", "cosine"))
-        drop_stale_partitions(spark, flags_path, batch_id)
-        (flags.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(flags_path))
+        replace_batch_partition(flags, flags_path, batch_id)
         replace_store_partition(spark, cur, vec_path, batch_id, block_col,
                                 n_buckets=store_buckets)
 
@@ -1098,7 +1009,7 @@ def embedding_dedup_multiband_sink(df: DataFrame, path: str,
     from ..functions.vectors import l2_norm, pair_cosine_lookup
     from ..operators.similarity import banded_projection
     from ..sources.layout import (
-        drop_stale_partitions, open_store, replace_store_partition,
+        open_store, replace_batch_partition, replace_store_partition,
     )
 
     band_path = f"{path}/bands"
@@ -1171,11 +1082,7 @@ def embedding_dedup_multiband_sink(df: DataFrame, path: str,
                  .filter(F.col("cosine") >= threshold)
                  .select("a_id", "b_id", "cosine")
                  .dropDuplicates(["a_id", "b_id"]))
-        drop_stale_partitions(spark, flags_path, batch_id)
-        (flags.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(flags_path))
+        replace_batch_partition(flags, flags_path, batch_id)
         replace_store_partition(spark, cur_b, band_path, batch_id,
                                 ["band", "val"], n_buckets=store_buckets)
         replace_store_partition(
@@ -1229,10 +1136,13 @@ def drift_sink(df: DataFrame, value_col: str, path: str, checkpoint: str,
     batch with the REFERENCE edges (out-of-range clamps to the edge bins
     — drifted mass lands visibly in the extremes), compute
     PSI = Σ (q−p)·ln(q/p), and write one (batch_id, n_rows, psi) row to a
-    ``batch_id=`` partition with dynamic overwrite — replay rewrites its
-    own row, never double-counts. State is the tiny ref histogram; the
+    ``batch_id=`` partition with ``replace_batch_partition`` — replay
+    rewrites its own row and sweeps stale later ones, never
+    double-counts. State is the tiny ref histogram; the
     monitor adds one aggregate per batch, no extra pass over the data.
     """
+
+    from ..sources.layout import replace_batch_partition
 
     def update(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -1273,12 +1183,10 @@ def drift_sink(df: DataFrame, value_col: str, path: str, checkpoint: str,
             * math.log((cur.get(b, 0.0) + eps)
                        / (ref_shares.get(b, 0.0) + eps))
             for b in range(bins))
-        (batch.sparkSession.createDataFrame(
-            [(int(total), float(round(psi, 6)), int(batch_id))],
-            "n_rows long, psi double, batch_id int")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(f"{path}/psi"))
+        replace_batch_partition(
+            spark.createDataFrame([(int(total), float(round(psi, 6)))],
+                                  "n_rows long, psi double"),
+            f"{path}/psi", batch_id)
 
     return (
         df.writeStream.foreachBatch(update)

@@ -50,6 +50,19 @@ def test_store_is_idempotent_and_keyed(engine, spark):
     assert engine._table().count() == 3
 
 
+def test_store_is_idempotent_at_scheme_qualified_path(spark, tmp_path):
+    """A ``file://`` store path must find the existing store: a second
+    store() of the same rows adds nothing instead of appending them again."""
+    from social_media_sentiment_analysis_spark.api import SentimentEngine
+
+    engine = SentimentEngine(spark, (tmp_path / "tweets_store").as_uri())
+    batch = _tweets(spark, [("t1", "great stuff", _at(0)),
+                            ("t2", "bad stuff", _at(1))])
+    assert engine.store(batch) == 2
+    assert engine.store(batch) == 0
+    assert engine._table().count() == 2
+
+
 def test_summary_and_recent_and_trailing_window(engine, spark):
     engine.store(_tweets(spark, [
         ("a", "great fast win", _at(0)),       # old (>24h before anchor)

@@ -204,6 +204,36 @@ def test_overwrite_partitions_is_scoped_and_idempotent(spark, sf_dir, tmp_path):
     assert again == after
 
 
+def test_commit_protocol_lives_only_in_layout():
+    """Ratchet: directory swaps, renames and dynamic partition overwrites
+    are the plain-parquet commit protocol, which lives in
+    ``sources/layout.py`` (``staged_swap``, ``overwrite_partitions``,
+    ``replace_batch_partition``). Any other package module that writes
+    one is a re-forked copy. The single-file ``os.replace`` spool commit
+    in ``sources/poll.py`` is the one allowed exception."""
+    import re
+
+    import social_media_sentiment_analysis_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    banned = re.compile(r"partitionOverwriteMode|os\.rename|os\.replace"
+                        r"|shutil\.move|\.rename\(")
+    allowed = {("sources/poll.py", "os.replace")}
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            rel = os.path.relpath(os.path.join(dirpath, name), root) \
+                .replace(os.sep, "/")
+            if not name.endswith(".py") or rel == "sources/layout.py":
+                continue
+            with open(os.path.join(dirpath, name)) as f:
+                for n, line in enumerate(f, 1):
+                    hits += [f"{rel}:{n}: {line.strip()}"
+                             for m in banned.finditer(line)
+                             if (rel, m.group()) not in allowed]
+    assert not hits, hits
+
+
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     """A filter on a joined dim must prune the fact's partition directories
     at runtime (DPP) — the mechanism that makes dim-filtered star joins

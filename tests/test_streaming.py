@@ -409,9 +409,71 @@ def test_upsert_sink_recovers_displaced_state_after_crashed_swap(
 
     rows = {r.k: r.total for r in spark.read.parquet(out).collect()}
     assert rows == {"old": 7, "new": 2}   # displaced state survived
-    # the completed swap also GC'd the orphan
-    assert not _os.path.exists(f"{out}.old-deadbeef")
+    # the completed swap also GC'd the orphan and left no staging dir
+    parent = _os.path.dirname(out)
+    assert not [n for n in _os.listdir(parent)
+                if ".old-" in n or ".staging-" in n]
     _shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@pytest.mark.parametrize("caller", [
+    "compact_parquet", "compact_store", "compact_flag_store",
+    "compact_reservoir_sample", "write_validated"])
+def test_swap_callers_recover_displaced_state_after_crashed_swap(
+        spark, tmp_path, caller):
+    """Every staged-swap caller shares the upsert sink's crash recovery:
+    a swap that crashed between its two renames leaves the committed
+    table only at ``{path}.old-<tag>``; the next call restores it,
+    completes, and leaves no ``.old-*`` or ``.staging-*`` sibling."""
+    import os as _os
+
+    from pyspark.sql import functions as F
+
+    from social_media_sentiment_analysis_spark.sources.layout import (
+        compact_parquet, compact_store, replace_store_partition,
+        write_validated,
+    )
+    from social_media_sentiment_analysis_spark.streaming.sinks import (
+        compact_flag_store, compact_reservoir_sample,
+    )
+
+    out = str(tmp_path / "t")
+    displaced = f"{out}.old-deadbeef"
+    rows = spark.createDataFrame(
+        [(i, f"h{i}", i % 3) for i in range(9)],
+        "doc_id long, __h string, batch_id int")
+    if caller == "compact_store":
+        for b in range(3):
+            replace_store_partition(
+                spark, rows.filter(F.col("batch_id") == b).drop("batch_id"),
+                out, b, "doc_id")
+        _os.rename(out, displaced)
+    else:
+        rows.write.partitionBy("batch_id").parquet(displaced)
+    assert not _os.path.exists(out)
+
+    if caller == "compact_parquet":
+        compact_parquet(spark, out)
+    elif caller == "compact_store":
+        assert compact_store(spark, out, "doc_id", upto_batch_id=2) == (3, 2)
+    elif caller == "compact_flag_store":
+        assert compact_flag_store(spark, out, upto_batch_id=2) == (3, 2)
+    elif caller == "compact_reservoir_sample":
+        assert compact_reservoir_sample(spark, out, upto_batch_id=2) == (3, 2)
+    else:
+        # a rejected write restores the committed table and keeps it
+        with pytest.raises(ValueError, match="non_negative_id"):
+            write_validated(rows.withColumn("doc_id", -F.col("doc_id") - 1),
+                            out, {"non_negative_id": F.col("doc_id") >= 0})
+        assert spark.read.parquet(out).count() == 9
+        write_validated(rows.filter(F.col("batch_id") == 0).drop("batch_id"),
+                        out, {"non_negative_id": F.col("doc_id") >= 0})
+        rows = rows.filter(F.col("batch_id") == 0)
+
+    got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+    assert got == sorted(r.doc_id for r in rows.collect())
+    assert not [n for n in _os.listdir(tmp_path)
+                if ".old-" in n or ".staging-" in n]
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, tmp_path_factory):
@@ -564,6 +626,53 @@ def test_cms_sink_incremental_and_replay_idempotent(spark, tmp_path):
     batch1 = spark.read.schema("w string").json(str(src / "b.jsonl"))
     _write_batch_sketch(batch1, 1, "w", out, 4, 1024)
     assert cells(read_cms(spark, out)) == expected
+
+
+def test_cms_sink_replay_after_checkpoint_loss_sweeps_stale_batches(
+        spark, tmp_path):
+    """A checkpoint-loss replay that re-batches differently: the first
+    drain writes a.jsonl as batch 0 and b.jsonl as batch 1; the replay
+    from an empty checkpoint reads both files into batch 0. Its write must
+    sweep the stale batch_id=1 partition, or ``read_cms`` sums b.jsonl's
+    sketch twice ("spark" would read 16 across the 4 rows, not 12)."""
+    import os as _os
+
+    from social_media_sentiment_analysis_spark.operators.cms import cms_build
+    from social_media_sentiment_analysis_spark.streaming import (
+        cms_sink, read_cms,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.jsonl").write_text(
+        '{"w": "spark"}\n{"w": "join"}\n{"w": "spark"}\n')
+    (src / "b.jsonl").write_text(
+        '{"w": "spark"}\n{"w": "scan"}\n')
+    _os.utime(src / "a.jsonl", (1_000_000, 1_000_000))
+    _os.utime(src / "b.jsonl", (2_000_000, 2_000_000))
+    out = str(tmp_path / "sketch")
+
+    def drain(ckpt, files_per_trigger=None):
+        reader = spark.readStream.schema("w string")
+        if files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+        run_available_now(cms_sink(reader.json(str(src)), "w", out,
+                                   str(tmp_path / ckpt)))
+
+    def cells(df):
+        return {(r.row, r.bucket): r.cnt for r in df.collect()}
+
+    expected = cells(cms_build(
+        spark.read.schema("w string").json(str(src)), "w"))
+    def batches():
+        return sorted(d for d in _os.listdir(out) if d.startswith("batch_id="))
+
+    drain("ckpt", files_per_trigger=1)
+    assert batches() == ["batch_id=0", "batch_id=1"]
+    assert cells(read_cms(spark, out)) == expected
+    drain("ckpt_lost")              # same output, fresh checkpoint
+    assert cells(read_cms(spark, out)) == expected
+    assert batches() == ["batch_id=0"]
 
 
 def test_quarantine_sink_routes_late_rows(spark, tmp_path):
