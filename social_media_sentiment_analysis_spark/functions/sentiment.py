@@ -165,20 +165,8 @@ def _score_columns_from_sums(df: DataFrame) -> DataFrame:
         "textblob_sentiment": _label_from(
             F.col("textblob_polarity"), TEXTBLOB_POS_THRESHOLD, strict=True),
     })
-    df = df.withColumn(
-        "combined_score",
-        F.lit(ENSEMBLE_VADER_WEIGHT) * _label_to_num(F.col("vader_sentiment"))
-        + F.lit(ENSEMBLE_TEXTBLOB_WEIGHT) * _label_to_num(F.col("textblob_sentiment")),
-    )
-    base_conf = F.abs(F.col("combined_score"))
-    df = df.withColumns({
-        "final_sentiment": _label_from(
-            F.col("combined_score"), FINAL_THRESHOLD, strict=True),
-        "confidence_score": F.when(
-            F.col("vader_sentiment") == F.col("textblob_sentiment"),
-            F.least(base_conf * F.lit(AGREEMENT_BOOST), F.lit(CONFIDENCE_CAP)),
-        ).otherwise(base_conf),
-    })
+    df = df.withColumns(ensemble_columns(
+        F.col("vader_sentiment"), F.col("textblob_sentiment")))
     return df.drop("__s", "__pos_n", "__neg_n", "__n_tok")
 
 

@@ -1,10 +1,11 @@
 """Text transforms as pure Column expressions (JVM-side, codegen-friendly).
 
-Covers the reference's scalar surface (SURVEY §2.7: F1 clean_text, F2 trim,
-F3 truncate) plus the engine's text-analysis extensions (token counting,
-quality scoring, language-ID heuristic, document fingerprinting). Everything
-here is expressible in ANSI SQL so the DuckDB oracle can verify it — no
-Python UDFs in this module.
+Covers the reference's scalar surface (SURVEY §2.7: F1 clean_text, F2 trim;
+F3's display truncation is the built-in ``F.substring``) plus the engine's
+text-analysis extensions (token counting, quality scoring, language-ID
+heuristic, document fingerprinting). Everything here is expressible in
+ANSI SQL so the DuckDB oracle can verify it — no Python UDFs in this
+module.
 """
 
 from __future__ import annotations
@@ -26,11 +27,6 @@ def clean_text(col: Column) -> Column:
     """
     no_rt = F.replace(F.coalesce(col, F.lit("")), F.lit("RT @"), F.lit(""))
     return F.trim(F.regexp_replace(no_rt, r"\s+", " "))
-
-
-def truncate_display(col: Column, n: int = 50) -> Column:
-    """F3: display truncation (twitter_streamer.py:260)."""
-    return F.substring(col, 1, n)
 
 
 def tokens(col: Column) -> Column:

@@ -111,7 +111,8 @@ def pair_cosine_lookup(pairs: DataFrame, vec_df: DataFrame,
     itself. The guard's ``count()`` is footer-only under parquet
     aggregate pushdown. ``id_col`` values must be unique and non-null and
     vectors non-null equal-length (the corpus contract shared with
-    ``banded_projection``).
+    ``banded_projection``). A pair naming an id that has no vector is
+    dropped on both paths, as the fallback's inner joins drop it.
     """
     limit = PAIR_LOOKUP_MAX_ROWS if max_rows is None else max_rows
     n_vecs = vec_df.count()
@@ -165,13 +166,27 @@ def pair_cosine_lookup(pairs: DataFrame, vec_df: DataFrame,
             except Exception:       # non-numeric ids: object-array compare
                 return np.asarray(col.to_pylist(), dtype=object)
 
+        def lookup(col):
+            # row index of each id in the sorted table, and whether the id
+            # is there at all: a miss lands on a neighbour or past the end
+            ids = as_np(col)
+            idx = np.searchsorted(sid, ids)
+            hit = idx < len(sid)
+            hit[hit] = sid[idx[hit]] == ids[hit]
+            return idx, hit
+
         sid, mt, nrm = bc.value
         for batch in batches:
+            ia, hit_a = lookup(batch.column(0))
+            ib, hit_b = lookup(batch.column(1))
+            # the fallback's inner joins drop a pair whose id has no vector
+            keep = hit_a & hit_b
+            if not keep.all():
+                batch = batch.filter(pa.array(keep))
+                ia, ib = ia[keep], ib[keep]
             n = batch.num_rows
             if n == 0:
                 continue
-            ia = np.searchsorted(sid, as_np(batch.column(0)))
-            ib = np.searchsorted(sid, as_np(batch.column(1)))
             acc = np.zeros(n, dtype=np.float64)
             for i in range(mt.shape[0]):
                 # dot's exact op order: acc + (a_i · b_i), left to right —

@@ -183,8 +183,8 @@ def jaccard_verify(df: DataFrame, candidates: DataFrame, text_col: str,
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
-                        shingle_k: int = 3, threshold: float = 0.7,
-                        prefix_tokens: int | None = None) -> DataFrame:
+                        shingle_k: int = 3,
+                        threshold: float = 0.7) -> DataFrame:
     """Exact n-gram-Jaccard near-duplicate pairs (a_id, b_id, jaccard).
 
     Candidate generation is an inverted-index self-join on shingles: two
@@ -192,42 +192,27 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     exploded (shingle -> id) postings to itself has FULL recall for any
     positive threshold — never an all-pairs cross join. Cost is
     sum(|postings|^2) over shingle values, i.e. quadratic only within
-    groups sharing a shingle; hot shingles are the skew risk, which is why
-    the scale path passes ``prefix_tokens`` to block on the md5 of the
-    first N tokens instead (near-linear, full recall when duplicates share
-    a prefix — see queries/llmdata.py::q_dedup_ngram_jaccard).
+    groups sharing a shingle; hot shingles are the skew risk. This is the
+    exact baseline that approximate joins are checked against; the
+    registry query ``dedup_ngram_jaccard`` blocks on the md5 of the first
+    tokens instead (near-linear, full recall when duplicates share a
+    prefix — see queries/llmdata.py::_jaccard_pairs).
     """
     sets_df = df.select(
         F.col(id_col).alias("__id"),
         F.array_distinct(shingles(F.col(text_col), shingle_k)).alias("sh"),
     ).filter(F.size("sh") > 0)
 
-    if prefix_tokens is not None:
-        blocked = df.select(
-            F.col(id_col).alias("__id"),
-            F.md5(F.concat_ws(
-                " ", F.slice(tokens(F.col(text_col)), 1, prefix_tokens)))
-            .alias("block"),
-        )
-        a = blocked.select(F.col("__id").alias("a_id"), "block")
-        b = blocked.select(F.col("__id").alias("b_id"), "block")
-        cands = (
-            a.join(b, "block")
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id")
-        )
-    else:
-        postings = sets_df.select(
-            "__id", F.explode("sh").alias("__shingle"))
-        cands = (
-            postings.alias("l")
-            .join(postings.alias("r"),
-                  (F.col("l.__shingle") == F.col("r.__shingle"))
-                  & (F.col("l.__id") < F.col("r.__id")))
-            .select(F.col("l.__id").alias("a_id"),
-                    F.col("r.__id").alias("b_id"))
-            .distinct()
-        )
+    postings = sets_df.select("__id", F.explode("sh").alias("__shingle"))
+    cands = (
+        postings.alias("l")
+        .join(postings.alias("r"),
+              (F.col("l.__shingle") == F.col("r.__shingle"))
+              & (F.col("l.__id") < F.col("r.__id")))
+        .select(F.col("l.__id").alias("a_id"),
+                F.col("r.__id").alias("b_id"))
+        .distinct()
+    )
 
     a_sets = sets_df.select(F.col("__id").alias("a_id"),
                             F.col("sh").alias("a_sh"))

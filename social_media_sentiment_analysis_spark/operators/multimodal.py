@@ -50,7 +50,8 @@ def _spread_for_python(df: DataFrame) -> DataFrame:
     parallelism. A small parquet table scans as ONE partition (file <
     maxPartitionBytes), which would serialize the whole Python stage
     through a single worker — measured as the dominant cost of media_phash
-    at sf0.1 (5000 rows, 1 partition, 32 idle cores; tools/phash_ab.py).
+    at sf0.1 (5000 rows, 1 partition, 32 idle cores; SCALE.md, round-4
+    ``media_phash`` A/B).
     Repartition round-robin only when the scan is under-parallel; at real
     scale (100 TB ⇒ ~10^5-10^6 input splits) the branch never fires and no
     shuffle is added.
@@ -349,7 +350,7 @@ def _phash_batch(payloads) -> "np.ndarray":
     shorter than the bucket count (empty buckets — reduceat can't express
     those) fall back to the scalar path; they are rare and tiny by
     definition. Measured 0.65 s → ~0.25 s on the sf0.1 decode stage
-    (tools/phash_ab.py)."""
+    (SCALE.md, round-4 ``media_phash`` A/B)."""
     import numpy as np
 
     k = _PHASH_CELLS + 1

@@ -299,76 +299,3 @@ def pairwise_topk_join(left: DataFrame, right: DataFrame, vec_col: str,
                 F.col(f"r_{right_id}").alias("neighbor_id"),
                 "cosine", "rank")
     )
-
-
-def brute_force_topk_pandas(df: DataFrame, query_vec: list[float],
-                            vec_col: str, id_col: str,
-                            k: int = 10) -> DataFrame:
-    """Arrow-vectorized twin of ``brute_force_topk``: cosine computed as a
-    numpy matrix product per Arrow batch inside ``mapInPandas``, followed
-    by the same TakeOrderedAndProject top-k.
-
-    Same results (same IEEE op order per element, rounded to 4), different
-    execution: the Column form stays in whole-stage codegen (zero Python);
-    this form pays one Python crossing per batch but multiplies the whole
-    batch against the query in one BLAS call — it wins when dimensions are
-    wide (hundreds+) where per-element codegen arithmetic beats BLAS no
-    longer. Benchmark both at your dimensionality; keep the Column form as
-    the default.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    def score(batches):
-        for pdf in batches:
-            m = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            sims = (m @ q) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "cosine": np.round(sims, 4)})
-
-    return (
-        df.select(id_col, vec_col)
-        .mapInPandas(score, schema=f"{id_col} long, cosine double")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def brute_force_topk_arrow(df: DataFrame, query_vec: list[float],
-                           vec_col: str, id_col: str,
-                           k: int = 10) -> DataFrame:
-    """``mapInArrow`` twin of the pandas kNN: operates directly on pyarrow
-    RecordBatches — no pandas materialization, so the per-batch overhead is
-    one FixedSize/ListArray→numpy view instead of a pandas Block build.
-    The lowest-overhead Python crossing Spark offers; same IEEE op order
-    and top-k as the Column and pandas forms (pinned equal in tests).
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    out_schema = f"{id_col} long, cosine double"
-
-    def score(batches):
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index(id_col))
-            vecs = batch.column(batch.schema.get_field_index(vec_col))
-            m = np.stack([np.asarray(v.values, dtype=np.float64)
-                          for v in vecs])
-            sims = (m @ q) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(np.round(sims, 4), type=pa.float64())],
-                names=[id_col, "cosine"])
-
-    return (
-        df.select(id_col, vec_col)
-        .mapInArrow(score, schema=out_schema)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )

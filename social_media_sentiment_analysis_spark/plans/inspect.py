@@ -56,11 +56,6 @@ def scan_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: struct<([^>\n]*)>", formatted_plan(df))
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)",
-                              physical_plan(df))))
-
-
 def _top_level_bracket_groups(s: str) -> list[str]:
     """Split '[..], [..], [..]' into top-level groups (nested [] handled)."""
     groups, depth, cur = [], 0, []

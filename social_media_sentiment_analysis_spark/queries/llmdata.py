@@ -2784,6 +2784,7 @@ def q_streaming_heavy_hitters(spark: SparkSession,
     from ..operators.cms import (
         DEFAULT_DEPTH, DEFAULT_WIDTH, cms_estimate,
     )
+    from ..session import run_concurrently
     from ..sources.batch import load_table_stream
     from ..streaming.sinks import cms_sink, read_cms, run_available_now
 
@@ -2815,15 +2816,7 @@ def q_streaming_heavy_hitters(spark: SparkSession,
         return words.groupBy("word").agg(
             F.count(F.lit(1)).alias("true_count")).localCheckpoint()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        drain_f = pool.submit(inheritable_thread_target(_drain))
-        counts_f = pool.submit(inheritable_thread_target(_true_counts))
-        sketch = drain_f.result()
-        true_counts = counts_f.result()
+    sketch, true_counts = run_concurrently(_drain, _true_counts)
     total = words.agg(F.count(F.lit(1)).alias("n_total"))
     eps = 2.718281828459045 / DEFAULT_WIDTH
     return (

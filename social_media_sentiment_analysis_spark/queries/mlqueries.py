@@ -49,16 +49,15 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     r9 (guide §2.6): the KMeans fit is ~45 serial driver-round jobs
     (k-means|| init + 8 iterations × 2 stages — the documented intrinsic
     cost of the iterative fit), and the EXACT brute-force arm does not
-    depend on the model, so the two run as concurrent jobs on a 2-thread
-    pool: the exact scoring pass back-fills cores the tiny fit rounds
-    leave idle. ``full`` (10 rows after the limit) is also checkpointed
+    depend on the model, so the two (plus the corpus count) run as
+    concurrent jobs through ``run_concurrently``: the exact scoring pass
+    back-fills cores the tiny fit rounds leave idle. ``full`` (10 rows after the limit) is also checkpointed
     so the action's two exceptAll directions read 10 materialized rows
     instead of re-running the all-cells scoring scan twice. Output
     value-identity pinned in-session (A==B rows); recall/full-probe
     booleans unchanged at all 3 SFs (oracle re-run)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators import similarity as sim
+    from ..session import run_concurrently
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = list(emb.filter(F.col("vec_id") == 0).select("embedding").first()[0])
@@ -85,19 +84,8 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return corpus.agg(F.count(F.lit(1)).alias("n_corpus")) \
             .localCheckpoint()
 
-    # inheritable_thread_target (r9 advice): pool threads inherit the
-    # caller's JVM-thread-local properties (job group / description /
-    # scheduler pool) under pinned-thread mode, so a harness-level
-    # job-group cancel or pool assignment covers every arm
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fit_f = pool.submit(inheritable_thread_target(_fit_arm))
-        exact_f = pool.submit(inheritable_thread_target(_exact_arm))
-        count_f = pool.submit(inheritable_thread_target(_count_arm))
-        ann, full = fit_f.result()
-        exact = exact_f.result()
-        n_corpus = count_f.result()
+    (ann, full), exact, n_corpus = run_concurrently(
+        _fit_arm, _exact_arm, _count_arm)
     # comma-joined string, not an array column: array encodings differ
     # between the two engines' pandas bridges (numpy array vs list), which
     # breaks the driver's repr-based value hash — same serialization

@@ -596,6 +596,7 @@ def q_streaming_rolling_distinct_hll(spark: SparkSession,
     a sketch-merge bug ANYWHERE across micro-batch boundaries flips the
     boolean and fails the value hash.
     """
+    from ..session import run_concurrently
     from ..sources.batch import load_events_stream
     from ..streaming.pipeline import drain_stream_to_df
 
@@ -616,10 +617,6 @@ def q_streaming_rolling_distinct_hll(spark: SparkSession,
     # dials session shuffle partitions — pipeline.py documents that the
     # concurrently planned batch arm may plan at the state dial's count,
     # which changes no results, only task width of a tiny distinct.)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     def _drain():
         return drain_stream_to_df(per_day_sk, "stream_hll_day")
 
@@ -630,11 +627,7 @@ def q_streaming_rolling_distinct_hll(spark: SparkSession,
                 .distinct()
                 .localCheckpoint())  # feeds spine + exact arm + semi-join
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        drain_f = pool.submit(inheritable_thread_target(_drain))
-        pairs_f = pool.submit(inheritable_thread_target(_pairs))
-        per_day = drain_f.result()
-        pairs = pairs_f.result()
+    per_day, pairs = run_concurrently(_drain, _pairs)
     spine = pairs.select("day").distinct().withColumnRenamed("day",
                                                              "win_day")
     win_days = F.explode(F.sequence(

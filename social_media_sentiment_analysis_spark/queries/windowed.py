@@ -594,9 +594,8 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic for a fixed dataset, not wall-clock dependent. ntile
     ties break on the customer key so quintile membership is engine-exact.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.ranking import with_ntile
+    from ..session import run_concurrently
 
     orders = load_table(spark, sf_dir, "orders")
     anchor = orders.agg(F.max("o_orderdate").alias("now"))
@@ -626,22 +625,15 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actions are only sequential because driver code calls them
     # sequentially) and re-attach the (o_custkey, score) pairs — 16-byte
     # rows — to the rollup by key.
-    def _score(spec):
-        out_col, order = spec
-        return with_ntile(per_cust, order, 5, out_col=out_col).select(
+    def _score(out_col, order):
+        return lambda: with_ntile(per_cust, order, 5, out_col=out_col).select(
             "o_custkey", out_col)
 
-    # inheritable_thread_target: pool threads inherit the caller's
-    # JVM-thread-local properties (job group / scheduler pool) under
-    # pinned-thread mode — harness-level cancellation covers all passes
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        r_s, f_s, m_s = list(pool.map(inheritable_thread_target(_score), [
-            ("r_score", [F.desc("recency_days"), F.asc("o_custkey")]),
-            ("f_score", [F.asc("frequency"), F.asc("o_custkey")]),
-            ("m_score", [F.asc("monetary"), F.asc("o_custkey")]),
-        ]))
+    r_s, f_s, m_s = run_concurrently(
+        _score("r_score", [F.desc("recency_days"), F.asc("o_custkey")]),
+        _score("f_score", [F.asc("frequency"), F.asc("o_custkey")]),
+        _score("m_score", [F.asc("monetary"), F.asc("o_custkey")]),
+    )
     scored = (per_cust.join(r_s, "o_custkey")
               .join(f_s, "o_custkey").join(m_s, "o_custkey"))
     scored = (

@@ -6,12 +6,18 @@ scale-oriented: AQE on (runtime coalesce + skew-join splitting), Arrow for any
 pandas exchange, and a shuffle-partition count sized for the local[32] test
 rig (on a real cluster you'd size it to ~2-3x total cores or rely on AQE
 coalescing from a higher initial number).
+
+``run_concurrently`` is the one way engine code runs independent actions
+as concurrent jobs.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -58,3 +64,20 @@ def get_spark(app_name: str = "social-media-sentiment-spark",
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(*thunks: Callable[[], Any]) -> list:
+    """Run each zero-argument thunk on its own pool thread, so independent
+    Spark actions run as concurrent jobs (guide §2.6 — actions are only
+    sequential because driver code calls them sequentially), and return the
+    results in argument order.
+
+    Every arm runs under ``inheritable_thread_target``: under pinned-thread
+    mode the pool thread inherits the caller's JVM-thread-local properties
+    (job group / description / scheduler pool), so a harness-level
+    job-group cancel or pool assignment covers every arm. An arm's
+    exception is re-raised here once all arms have finished.
+    """
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        return [f.result() for f in futures]

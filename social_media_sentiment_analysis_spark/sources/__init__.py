@@ -1,2 +1,2 @@
-from .batch import load_table, load_tables, register_views  # noqa: F401
+from .batch import load_table  # noqa: F401
 from .poll import TweetPollDataSource  # noqa: F401

@@ -1,4 +1,4 @@
-"""Batch IO: parquet/JSONL readers over the driver's testdata layout.
+"""Batch IO: parquet readers over the driver's testdata layout.
 
 Scale notes: ``spark.read.parquet`` gives vectorized scans, predicate
 pushdown and partition pruning for free; loaders here deliberately return
@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..schemas import TESTDATA_TABLES
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -84,27 +82,6 @@ def spread_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= max(2, sess_parts // 2):
         return df
     return df.repartition(sess_parts)
-
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TESTDATA_TABLES) -> None:
-    """Register each table as a temp view for spark.sql() use."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Read append-only JSONL (the reference's file-sink format,
-    twitter_streamer.py:206-210) with an explicit schema when given."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
 
 
 def read_evolving(spark: SparkSession, path: str,

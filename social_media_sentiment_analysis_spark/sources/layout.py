@@ -50,10 +50,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str,
     writer.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def write_range_sorted(df: DataFrame, path: str, sort_col: str,
                        n_files: int = 8) -> None:
     """Write parquet clustered on ``sort_col``: range-repartition into

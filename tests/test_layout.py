@@ -1,5 +1,6 @@
 """Table-layout tests: partition pruning actually prunes, and a
-bucketed-bucketed join plans with zero shuffle exchanges."""
+bucketed-bucketed join plans with zero shuffle exchanges. Also the
+source-scan ratchets that keep each recurring protocol in one module."""
 
 from __future__ import annotations
 
@@ -204,6 +205,32 @@ def test_overwrite_partitions_is_scoped_and_idempotent(spark, sf_dir, tmp_path):
     assert again == after
 
 
+def _source_hits(banned: str, owner: str,
+                 allowed: frozenset = frozenset()) -> list[str]:
+    """Every match of ``banned`` in a package module other than ``owner``
+    (a path relative to the package root), minus (module, match) pairs in
+    ``allowed`` — the scan behind the one-owner ratchets below."""
+    import re
+
+    import social_media_sentiment_analysis_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    pattern = re.compile(banned)
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            rel = os.path.relpath(os.path.join(dirpath, name), root) \
+                .replace(os.sep, "/")
+            if not name.endswith(".py") or rel == owner:
+                continue
+            with open(os.path.join(dirpath, name)) as f:
+                for n, line in enumerate(f, 1):
+                    hits += [f"{rel}:{n}: {line.strip()}"
+                             for m in pattern.finditer(line)
+                             if (rel, m.group()) not in allowed]
+    return hits
+
+
 def test_commit_protocol_lives_only_in_layout():
     """Ratchet: directory swaps, renames and dynamic partition overwrites
     are the plain-parquet commit protocol, which lives in
@@ -211,26 +238,20 @@ def test_commit_protocol_lives_only_in_layout():
     ``replace_batch_partition``). Any other package module that writes
     one is a re-forked copy. The single-file ``os.replace`` spool commit
     in ``sources/poll.py`` is the one allowed exception."""
-    import re
+    hits = _source_hits(r"partitionOverwriteMode|os\.rename|os\.replace"
+                        r"|shutil\.move|\.rename\(", "sources/layout.py",
+                        frozenset({("sources/poll.py", "os.replace")}))
+    assert not hits, hits
 
-    import social_media_sentiment_analysis_spark as pkg
 
-    root = os.path.dirname(pkg.__file__)
-    banned = re.compile(r"partitionOverwriteMode|os\.rename|os\.replace"
-                        r"|shutil\.move|\.rename\(")
-    allowed = {("sources/poll.py", "os.replace")}
-    hits = []
-    for dirpath, _, files in os.walk(root):
-        for name in files:
-            rel = os.path.relpath(os.path.join(dirpath, name), root) \
-                .replace(os.sep, "/")
-            if not name.endswith(".py") or rel == "sources/layout.py":
-                continue
-            with open(os.path.join(dirpath, name)) as f:
-                for n, line in enumerate(f, 1):
-                    hits += [f"{rel}:{n}: {line.strip()}"
-                             for m in banned.finditer(line)
-                             if (rel, m.group()) not in allowed]
+def test_concurrent_arms_live_only_in_session():
+    """Ratchet: independent job arms run through
+    ``session.run_concurrently``, the one place that wraps pool threads in
+    ``inheritable_thread_target`` (so harness cancellation reaches every
+    arm). Any other package module with its own pool is a re-forked copy
+    that can drop the wrapper."""
+    hits = _source_hits(r"ThreadPoolExecutor|inheritable_thread_target",
+                        "session.py")
     assert not hits, hits
 
 

@@ -184,41 +184,6 @@ class TestHashedEmbedding:
         assert min(dup_cos) > sum(rand_cos) / len(rand_cos)
 
 
-def test_pandas_knn_matches_column_knn(spark, sf_dir):
-    """The Arrow/numpy brute-force path returns the same top-k (ids and
-    rounded cosines) as the pure-Column path."""
-    from social_media_sentiment_analysis_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_pandas,
-    )
-    from social_media_sentiment_analysis_spark.sources.batch import load_table
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = list(emb.filter(F.col("vec_id") == 0).first().embedding)
-    corpus = emb.filter(F.col("vec_id") != 0)
-    a = [(r.vec_id, r.cosine) for r in
-         brute_force_topk(corpus, qvec, "embedding", "vec_id", k=10).collect()]
-    b = [(r.vec_id, r.cosine) for r in
-         brute_force_topk_pandas(corpus, qvec, "embedding", "vec_id",
-                                 k=10).collect()]
-    assert a == b
-
-
-def test_arrow_knn_matches_column_knn(spark, sf_dir):
-    from social_media_sentiment_analysis_spark.operators.similarity import (
-        brute_force_topk, brute_force_topk_arrow,
-    )
-    from social_media_sentiment_analysis_spark.sources.batch import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.limit(1).collect()[0]["embedding"]]
-    col = brute_force_topk(emb, qv, "embedding", "vec_id", k=10).collect()
-    arw = brute_force_topk_arrow(emb, qv, "embedding", "vec_id", k=10).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in col] == \
-           [(r["vec_id"], r["cosine"]) for r in arw]
-
-
 class TestMultibandLSH:
     """OR-of-bands hyperplane LSH (operators/similarity.py::
     multiband_lsh_pairs): exact precision by construction, recall at the
@@ -338,6 +303,32 @@ class TestMultibandLSH:
                                        "a_id", "b_id",
                                        max_rows=0).collect()}
         assert fallback == fold
+
+    @pytest.mark.parametrize("pairs", [[(1, 2)], [(1, 9)],
+                                       [(1, 3), (1, 2), (9, 5), (3, 5)]])
+    def test_pair_cosine_lookup_drops_foreign_ids_like_fallback(
+            self, spark, pairs):
+        """A pair id with no row in the vector table: the broadcast kernel
+        must drop the pair, as the fallback's inner joins do — not read a
+        neighbour's vector (id 2 sits between 1 and 3) or index past the
+        end of the table (id 9 is above every table id)."""
+        from social_media_sentiment_analysis_spark.functions.vectors import (
+            pair_cosine_lookup,
+        )
+
+        vecs = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (3, [0.6, 0.8]), (5, [0.0, 1.0])],
+            "id long, v array<float>")
+        cand = spark.createDataFrame(pairs, "a long, b long")
+
+        def run(**kw):
+            return sorted(tuple(r) for r in pair_cosine_lookup(
+                cand, vecs, "id", "v", "a", "b", **kw).collect())
+
+        fallback = run(max_rows=0)
+        assert run() == fallback
+        assert {(a, b) for a, b, _ in fallback} == \
+            {(a, b) for a, b in pairs if {a, b} <= {1, 3, 5}}
 
     def test_deterministic_and_band_count_dials_recall(self, spark, sf_dir):
         """Same inputs → identical output; and recall is monotone in the
