@@ -377,26 +377,19 @@ def q_streaming_dedup_embedding(spark: SparkSession,
     presentation top-k). A probe that misses the store, double-counts a
     replay, or breaks the cosine algebra breaks the hash.
     """
-    import shutil
-    import tempfile
-
     from ..sources.batch import load_table_stream
-    from ..streaming.sinks import (
-        embedding_dedup_sink, read_embedding_flags, run_available_now,
-    )
+    from ..streaming.pipeline import drain_through_store
+    from ..streaming.sinks import embedding_dedup_sink, read_embedding_flags
 
-    root = tempfile.mkdtemp(prefix="embdedup_")
-    try:
-        src = load_table_stream(spark, sf_dir, "embeddings") \
-            .select("vec_id", "label", "embedding")
-        run_available_now(embedding_dedup_sink(
+    src = load_table_stream(spark, sf_dir, "embeddings") \
+        .select("vec_id", "label", "embedding")
+    res = drain_through_store(
+        "embdedup_",
+        lambda root: embedding_dedup_sink(
             src, f"{root}/store", f"{root}/ckpt",
-            threshold=_EMB_SIM_THRESHOLD))
-        res = (read_embedding_flags(spark, f"{root}/store")
-               .select("a_id", "b_id", "cosine")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            threshold=_EMB_SIM_THRESHOLD),
+        lambda root: read_embedding_flags(spark, f"{root}/store")
+        .select("a_id", "b_id", "cosine"))
     return res.orderBy("a_id", "b_id")
 
 
@@ -471,28 +464,21 @@ def q_streaming_dedup_embedding_lsh(spark: SparkSession,
     also surfaces cross-label similar pairs label-blocking can never see
     (51 vs 14 flags at sf0.001).
     """
-    import shutil
-    import tempfile
-
     from ..sources.batch import load_table_stream
-    from ..streaming.sinks import (
-        embedding_dedup_sink, read_embedding_flags, run_available_now,
-    )
+    from ..streaming.pipeline import drain_through_store
+    from ..streaming.sinks import embedding_dedup_sink, read_embedding_flags
 
-    root = tempfile.mkdtemp(prefix="embdeduplsh_")
-    try:
-        src = (load_table_stream(spark, sf_dir, "embeddings")
-               .select("vec_id", "embedding")
-               .withColumn("bucket", sim.hyperplane_bucket(
-                   F.col("embedding"), _LSH_DIM, _LSH_BITS)))
-        run_available_now(embedding_dedup_sink(
+    src = (load_table_stream(spark, sf_dir, "embeddings")
+           .select("vec_id", "embedding")
+           .withColumn("bucket", sim.hyperplane_bucket(
+               F.col("embedding"), _LSH_DIM, _LSH_BITS)))
+    res = drain_through_store(
+        "embdeduplsh_",
+        lambda root: embedding_dedup_sink(
             src, f"{root}/store", f"{root}/ckpt", block_col="bucket",
-            threshold=_EMB_SIM_THRESHOLD))
-        res = (read_embedding_flags(spark, f"{root}/store")
-               .select("a_id", "b_id", "cosine")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            threshold=_EMB_SIM_THRESHOLD),
+        lambda root: read_embedding_flags(spark, f"{root}/store")
+        .select("a_id", "b_id", "cosine"))
     return res.orderBy("a_id", "b_id")
 
 
@@ -545,28 +531,22 @@ def q_streaming_dedup_embedding_multiband(spark: SparkSession,
     — the same FULL value oracle family as ``dedup_embedding_multiband``
     (~0.98 recall vs exhaustive, measured; the third and highest-recall
     member of the streaming embedding-dedup trio)."""
-    import shutil
-    import tempfile
-
     from ..sources.batch import load_table_stream
+    from ..streaming.pipeline import drain_through_store
     from ..streaming.sinks import (
         embedding_dedup_multiband_sink, read_embedding_flags,
-        run_available_now,
     )
 
-    root = tempfile.mkdtemp(prefix="embdedupmb_")
-    try:
-        src = (load_table_stream(spark, sf_dir, "embeddings")
-               .select("vec_id", "embedding"))
-        run_available_now(embedding_dedup_multiband_sink(
+    src = (load_table_stream(spark, sf_dir, "embeddings")
+           .select("vec_id", "embedding"))
+    res = drain_through_store(
+        "embdedupmb_",
+        lambda root: embedding_dedup_multiband_sink(
             src, f"{root}/store", f"{root}/ckpt", dim=_LSH_DIM,
             bands=_MB_BANDS, band_bits=_MB_BITS,
-            threshold=_EMB_SIM_THRESHOLD))
-        res = (read_embedding_flags(spark, f"{root}/store")
-               .select("a_id", "b_id", "cosine")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            threshold=_EMB_SIM_THRESHOLD),
+        lambda root: read_embedding_flags(spark, f"{root}/store")
+        .select("a_id", "b_id", "cosine"))
     return res.orderBy("a_id", "b_id")
 
 
@@ -2634,24 +2614,17 @@ def q_streaming_reservoir_sample(spark: SparkSession,
     maintenance converges to the batch answer exactly: a merge bug that
     ever evicts a lower-priority row for a higher one breaks the hash.
     """
-    import shutil
-    import tempfile
-
     from ..sources.batch import load_table_stream
-    from ..streaming.sinks import (
-        read_reservoir_sample, reservoir_sample_sink, run_available_now,
-    )
+    from ..streaming.pipeline import drain_through_store
+    from ..streaming.sinks import read_reservoir_sample, reservoir_sample_sink
 
-    root = tempfile.mkdtemp(prefix="reservoir_")
-    try:
-        src = load_table_stream(spark, sf_dir, "documents") \
-            .select("doc_id", "source", "lang", "n_chars")
-        run_available_now(reservoir_sample_sink(
-            src, f"{root}/sample", f"{root}/ckpt", k=_RESERVOIR_K))
-        res = read_reservoir_sample(
-            spark, f"{root}/sample").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = load_table_stream(spark, sf_dir, "documents") \
+        .select("doc_id", "source", "lang", "n_chars")
+    res = drain_through_store(
+        "reservoir_",
+        lambda root: reservoir_sample_sink(
+            src, f"{root}/sample", f"{root}/ckpt", k=_RESERVOIR_K),
+        lambda root: read_reservoir_sample(spark, f"{root}/sample"))
     w = Window.orderBy("__h")
     return (res
             .withColumn("pick_rank",
@@ -2778,15 +2751,13 @@ def q_streaming_heavy_hitters(spark: SparkSession,
     past ε·N for the top words), so cross-micro-batch merge bugs fail
     the value hash even though the estimate itself has no SQL twin.
     """
-    import shutil
-    import tempfile
-
     from ..operators.cms import (
         DEFAULT_DEPTH, DEFAULT_WIDTH, cms_estimate,
     )
     from ..session import run_concurrently
     from ..sources.batch import load_table_stream
-    from ..streaming.sinks import cms_sink, read_cms, run_available_now
+    from ..streaming.pipeline import drain_through_store
+    from ..streaming.sinks import cms_sink, read_cms
 
     word_arr = F.filter(F.split(F.lower("text"), "[^a-z]+"),
                         lambda t: t != F.lit(""))
@@ -2797,20 +2768,19 @@ def q_streaming_heavy_hitters(spark: SparkSession,
     # drain and batch true-count arm are independent until the probe join;
     # run them as concurrent jobs (guide §2.6, the knn_ivf recipe) so the
     # corpus word aggregate back-fills cores while the drain sits in
-    # MicroBatchExecution's driver-side machinery (pipeline.py documents
-    # the drain's temporary shuffle-partition dial; it changes no results)
+    # MicroBatchExecution's driver-side machinery. The CMS sink keeps no
+    # streaming state, so the drain starts through ``run_available_now``,
+    # which never touches the session conf while the other arm plans.
     def _drain():
-        root = tempfile.mkdtemp(prefix="cms_stream_")
-        try:
-            src_words = (load_table_stream(spark, sf_dir, "documents")
-                         .filter(F.col("lang") == "en")
-                         .select(F.explode(word_arr).alias("word")))
-            run_available_now(cms_sink(
+        src_words = (load_table_stream(spark, sf_dir, "documents")
+                     .filter(F.col("lang") == "en")
+                     .select(F.explode(word_arr).alias("word")))
+        return drain_through_store(
+            "cms_stream_",
+            lambda root: cms_sink(
                 src_words, "word", f"{root}/cms", f"{root}/ckpt",
-                depth=DEFAULT_DEPTH, width=DEFAULT_WIDTH))
-            return read_cms(spark, f"{root}/cms").localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+                depth=DEFAULT_DEPTH, width=DEFAULT_WIDTH),
+            lambda root: read_cms(spark, f"{root}/cms"))
 
     def _true_counts():
         return words.groupBy("word").agg(

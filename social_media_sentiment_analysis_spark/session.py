@@ -72,12 +72,19 @@ def run_concurrently(*thunks: Callable[[], Any]) -> list:
     sequential because driver code calls them sequentially), and return the
     results in argument order.
 
-    Every arm runs under ``inheritable_thread_target``: under pinned-thread
-    mode the pool thread inherits the caller's JVM-thread-local properties
-    (job group / description / scheduler pool), so a harness-level
-    job-group cancel or pool assignment covers every arm. An arm's
-    exception is re-raised here once all arms have finished.
+    Every arm runs under ``inheritable_thread_target`` given the active
+    session: under pinned-thread mode the pool thread inherits the
+    caller's JVM-thread-local properties (job group / description /
+    scheduler pool) and its session tags, so a harness-level job-group
+    cancel, ``interruptTag`` or pool assignment covers every arm. An
+    arm's exception is re-raised here once all arms have finished.
+    With pinned-thread mode off (``PYSPARK_PIN_THREAD=false``) PySpark
+    returns the session itself instead of a wrapper — there is no
+    per-thread JVM state to carry — and the arms run unwrapped.
     """
+    session = SparkSession.active()
+    wrap = inheritable_thread_target(session)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futures = [pool.submit(t if wrap is session else wrap(t))
+                   for t in thunks]
         return [f.result() for f in futures]

@@ -14,7 +14,10 @@ lives in the metastore, not the files.
 This module also owns the engine's plain-parquet commit protocol — the
 one place a table directory is swapped, a keyed store is probed for
 insert-if-absent, or a ``batch_id=`` partition is replaced:
-``staged_swap``, ``absent_rows`` and ``replace_batch_partition``.
+``staged_swap``, ``absent_rows`` and ``replace_batch_partition`` — and
+both halves of the streaming stores' replay contract: the write
+(``replace_store_partition``) and the strictly-earlier probe read
+(``earlier_partitions``).
 """
 
 from __future__ import annotations
@@ -442,6 +445,30 @@ def open_store(spark: SparkSession, location: str,
         raise             # anything else (corrupt footer, ...) fails loudly
     _register_store(spark, table, location, schema, bucket_cols, n_buckets)
     return table
+
+
+def earlier_partitions(spark: SparkSession, location: str,
+                       bucket_cols: str | list[str], batch_id: int,
+                       n_buckets: int = STORE_BUCKETS) -> DataFrame | None:
+    """The probe side of a store for micro-batch ``batch_id``: every
+    partition STRICTLY earlier than it (the ``batch_id=-1`` seed always
+    included), read through the bucketed catalog table; ``None`` while the
+    store is absent (first batch). Over the bucketed layout the scan is
+    partition-pruned and exchange-free — tests pin that plan through this
+    function.
+
+    Strictly earlier, not just ``!=`` the current batch: after a
+    checkpoint-loss replay the store could hold partitions from batches
+    the original run processed LATER; probing them would re-discover each
+    cross-batch match from both sides and land it in two batch partitions.
+    With ``<``, every match is discovered exactly once — by the LATER
+    batch — and a replayed batch rewrites exactly what it owned (the write
+    path additionally sweeps stale future partitions, see
+    ``drop_stale_partitions``, so this is belt and braces)."""
+    table = open_store(spark, location, bucket_cols, n_buckets)
+    if table is None:
+        return None
+    return spark.table(table).filter(F.col("batch_id") < F.lit(batch_id))
 
 
 def drop_stale_partitions(spark: SparkSession, location: str,

@@ -19,12 +19,16 @@ Streaming semantics upgrades over the reference (SURVEY §2.9):
 from __future__ import annotations
 
 import os
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.sentiment import sentiment_enrich
 from ..schemas import TWEET_ENVELOPE_SCHEMA
+from .sinks import run_available_now
 
 
 def read_tweet_file_stream(spark: SparkSession, path: str,
@@ -331,8 +335,7 @@ def _drain_available_now(spark: SparkSession, writer) -> None:
     spark.conf.set("spark.sql.shuffle.partitions",
                    str(STREAM_STATE_PARTITIONS))
     try:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
+        run_available_now(writer)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
@@ -383,27 +386,36 @@ def drain_stream_to_parquet(streaming_df: DataFrame,
     (``drain_stream_to_df``) stays for aggregates bounded by construction
     (3-5 row summaries), where a parquet round-trip is pure overhead.
     """
-    import os
-    import shutil
-    import tempfile
-
     spark = streaming_df.sparkSession
-    out_dir = tempfile.mkdtemp(prefix=f"{name_prefix}_")
+    with tempfile.TemporaryDirectory(prefix=f"{name_prefix}_",
+                                     ignore_cleanup_errors=True) as out_dir:
 
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
+        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(out_dir)
 
-    _drain_available_now(
-        spark,
-        streaming_df.writeStream.foreachBatch(write_batch)
-        .outputMode("complete"))
-    try:
+        _drain_available_now(
+            spark,
+            streaming_df.writeStream.foreachBatch(write_batch)
+            .outputMode("complete"))
         if not any(f.endswith(".parquet") for f in os.listdir(out_dir)):
             # zero micro-batches fired (empty source): an empty result with
             # the declared schema, never a schema-inference crash
             return spark.createDataFrame([], streaming_df.schema)
         # eager checkpoint materializes the blocks so the directory can go
-        result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-    return result
+        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
+
+
+def drain_through_store(prefix: str,
+                        sink: Callable[[str], DataStreamWriter],
+                        read: Callable[[str], DataFrame]) -> DataFrame:
+    """Drain a store-backed streaming sink into a scratch root and return
+    what ``read`` makes of the store: ``sink(root)`` builds the writer
+    (store and checkpoint under ``root``), ``run_available_now`` drains it,
+    and ``read(root)`` is checkpointed EAGERLY — the blocks must be
+    materialized before the root is deleted, or a later action would read
+    files that are gone. The root is deleted whether the drain succeeds or
+    raises."""
+    with tempfile.TemporaryDirectory(prefix=prefix,
+                                     ignore_cleanup_errors=True) as root:
+        run_available_now(sink(root))
+        return read(root).localCheckpoint(eager=True)

@@ -274,24 +274,6 @@ def quarantine_sink(df: DataFrame, main_path: str, late_path: str,
     )
 
 
-def _band_store_probe(spark: SparkSession, bands_location: str,
-                      batch_id: int) -> DataFrame | None:
-    """The band-store probe side for ``near_dedup_sink``'s micro-batch N:
-    strictly-earlier partitions of the (band, band_hash)-bucketed store.
-    Separated out so tests can pin the probe PLAN: the store arrives
-    pre-shuffled (Bucketed scan, zero exchanges on this side) and
-    partition-pruned to ``batch_id < N`` — per-batch probe cost never
-    re-shuffles history (r6 verdict #1)."""
-    from ..sources.layout import open_store
-
-    table = open_store(spark, bands_location, ["band", "band_hash"])
-    if table is None:
-        return None
-    return (spark.table(table)
-            .filter(F.col("batch_id") < F.lit(batch_id))
-            .select("band", "band_hash"))
-
-
 def near_dedup_sink(df: DataFrame, path: str, checkpoint: str,
                     text_col: str = "text", id_col: str = "doc_id",
                     num_hashes: int = 32, num_bands: int = 8,
@@ -317,7 +299,8 @@ def near_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     contract: a replayed batch REPLACES its own partition, and stale
     FUTURE partitions left by a divergent checkpoint-loss re-batching are
     swept before writing (``drop_stale_partitions``), so the probe's
-    strictly-earlier filter is sound under any re-batching.
+    strictly-earlier read (``earlier_partitions``) is sound under any
+    re-batching.
 
     State is the band-key table: ``num_bands`` small rows per KEPT doc —
     at 100 TB that's the dedup index a batch pipeline would persist anyway,
@@ -330,7 +313,7 @@ def near_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     """
     from ..operators.dedup import band_keys, minhash_signatures
     from ..sources.layout import (
-        replace_batch_partition, replace_store_partition,
+        earlier_partitions, replace_batch_partition, replace_store_partition,
     )
 
     docs_path = f"{path}/docs"
@@ -343,10 +326,12 @@ def near_dedup_sink(df: DataFrame, path: str, checkpoint: str,
                                   num_hashes=num_hashes, shingle_k=shingle_k)
         keys = band_keys(sigs, id_col, num_bands=num_bands,
                          rows_per_band=rows_per_band).cache()
-        store = _band_store_probe(spark, bands_path, batch_id)
+        store = earlier_partitions(spark, bands_path, ["band", "band_hash"],
+                                   batch_id, store_buckets)
         dropped = None
         if store is not None:      # store absent only on the first batch
-            dropped = (keys.join(store, ["band", "band_hash"], "left_semi")
+            dropped = (keys.join(store.select("band", "band_hash"),
+                                 ["band", "band_hash"], "left_semi")
                        .select(id_col).distinct())
         survivors_keys = keys if dropped is None else keys.join(
             dropped, id_col, "left_anti")
@@ -400,19 +385,21 @@ def rewrite_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     chunk_rows`` — the SAME chunker the batch query uses, so incremental
     and batch policies act on identical chunk sets); within-batch first
     occurrences are one row_number window over md5(txt); the cross-batch
-    probe is a left_anti join against the persisted fingerprint store
-    EXCLUDING the current batch's own partition. Cleaned docs and the
-    batch's new fingerprints land in ``batch_id=`` partitions with dynamic
-    partition overwrite — a replayed batch REPLACES its own output and
-    never drops a chunk as a duplicate of itself (exactly-once contents on
-    at-least-once delivery, the ``near_dedup_sink``/``cms_sink`` recipe).
+    probe is a left join against the distinct fingerprints of the
+    persisted store's strictly-earlier partitions (``sources/layout.py::
+    earlier_partitions``). Cleaned docs and the batch's new fingerprints
+    land in ``batch_id=`` partitions with dynamic partition overwrite — a
+    replayed batch REPLACES its own output and never drops a chunk as a
+    duplicate of itself (exactly-once contents on at-least-once delivery,
+    the ``near_dedup_sink``/``cms_sink`` recipe).
 
     State is the chunk-fingerprint store: one ~32-byte row per DISTINCT
     chunk ever kept — the same index a batch rewrite would persist, shared
     and pruned with the corpus, held as an external catalog table
     bucketed+sorted by the fingerprint (``sources/layout.py``) so the
     per-batch probe's store side is a pruned bucketed scan with ZERO
-    exchanges — history never re-shuffles (r6 verdict #1). Nothing
+    exchanges — history never re-shuffles (r6 verdict #1; tests pin the
+    plan of ``earlier_partitions``, the probe read). Nothing
     corpus-derived is broadcast. Replay: a replayed batch replaces its
     own partitions, and stale FUTURE partitions from a divergent
     checkpoint-loss re-batching are swept before writing, so a full
@@ -425,7 +412,7 @@ def rewrite_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     """
     from ..operators.dedup import chunk_rows
     from ..sources.layout import (
-        replace_batch_partition, replace_store_partition,
+        earlier_partitions, replace_batch_partition, replace_store_partition,
     )
 
     docs_path = f"{path}/docs"
@@ -439,10 +426,12 @@ def rewrite_dedup_sink(df: DataFrame, path: str, checkpoint: str,
         w = Window.partitionBy("h").orderBy(id_col, "chunk_id")
         marked = rows.withColumn(
             "keep", F.row_number().over(w) == 1)
-        store = _chunk_store_probe(spark, fps_path, batch_id)
+        store = earlier_partitions(spark, fps_path, "h", batch_id,
+                                   store_buckets)
         if store is not None:      # store absent only on the first batch
-            marked = (marked.join(store.withColumn("__seen", F.lit(True)),
-                                  "h", "left")
+            seen = store.select("h").distinct() \
+                .withColumn("__seen", F.lit(True))
+            marked = (marked.join(seen, "h", "left")
                       .withColumn(
                           "keep",
                           F.col("keep") & F.col("__seen").isNull())
@@ -475,22 +464,6 @@ def rewrite_dedup_sink(df: DataFrame, path: str, checkpoint: str,
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-
-
-def _chunk_store_probe(spark: SparkSession, chunks_location: str,
-                       batch_id: int) -> DataFrame | None:
-    """The chunk-fingerprint probe side for ``rewrite_dedup_sink``'s
-    micro-batch N: distinct fingerprints from strictly-earlier partitions.
-    Over the bucketed-by-h store table both the DISTINCT and the probe
-    join's store side run WITHOUT an exchange (tests pin the plan)."""
-    from ..sources.layout import open_store
-
-    table = open_store(spark, chunks_location, "h")
-    if table is None:
-        return None
-    return (spark.table(table)
-            .filter(F.col("batch_id") < F.lit(batch_id))
-            .select("h").distinct())
 
 
 def read_rewritten_corpus(spark: SparkSession, path: str,
@@ -723,7 +696,7 @@ def winnow_containment_sink(df: DataFrame, path: str, checkpoint: str,
                    / F.least(F.col("n_a"), F.col("n_b")))
         flags = None
         store = _fp_store_probe(spark, fps_path, stats_path, batch_id,
-                                max_fp_docs, id_col)
+                                max_fp_docs, id_col, store_buckets)
         if store is not None:      # store absent only on the first batch
             cross = (fps.join(store, "fp")
                      .filter(F.col(id_col) != F.col("old_id"))
@@ -771,34 +744,28 @@ def winnow_containment_sink(df: DataFrame, path: str, checkpoint: str,
 
 def _fp_store_probe(spark: SparkSession, fps_location: str,
                     stats_location: str, batch_id: int,
-                    max_fp_docs: int, id_col: str) -> DataFrame | None:
+                    max_fp_docs: int, id_col: str,
+                    n_buckets: int = 16) -> DataFrame | None:
     """The fingerprint-store probe side for ``winnow_containment_sink``'s
-    micro-batch N. STRICTLY-earlier batches only (not just != current):
-    after a checkpoint-loss replay the store could hold partitions from
-    batches the original run processed LATER; probing them would
-    re-discover each cross-batch pair from both sides and land it in two
-    batch partitions (duplicate flags). With <, every pair is discovered
-    exactly once — by the LATER doc's batch — and a replayed batch
-    rewrites exactly the flags it owned (the write path additionally
-    sweeps stale future partitions, so this is belt and braces).
+    micro-batch N: strictly-earlier partitions of the fingerprint store
+    (``sources/layout.py::earlier_partitions``), so every cross-batch pair
+    is discovered exactly once — by the LATER doc's batch.
 
     The hot-fp cap (universal boilerplate held by > max_fp_docs docs)
     reads the incrementally-maintained stats store: per-fp doc-count
     deltas summed over strictly-earlier partitions — over the
     bucketed-by-fp layout the rollup, the anti-join and the store scan
     are all exchange-free (tests pin the plan)."""
-    from ..sources.layout import open_store
+    from ..sources.layout import earlier_partitions
 
-    table = open_store(spark, fps_location, "fp")
-    if table is None:
+    store = earlier_partitions(spark, fps_location, "fp", batch_id,
+                               n_buckets)
+    if store is None:
         return None
-    store = (spark.table(table)
-             .filter(F.col("batch_id") < F.lit(batch_id)))
-    stats_table = open_store(spark, stats_location, "fp")
-    if stats_table is not None:
-        hot = (spark.table(stats_table)
-               .filter(F.col("batch_id") < F.lit(batch_id))
-               .groupBy("fp").agg(F.sum("n_docs").alias("__docs"))
+    stats = earlier_partitions(spark, stats_location, "fp", batch_id,
+                               n_buckets)
+    if stats is not None:
+        hot = (stats.groupBy("fp").agg(F.sum("n_docs").alias("__docs"))
                .filter(F.col("__docs") > max_fp_docs)
                .select("fp"))
         store = store.join(hot, "fp", "left_anti")
@@ -873,15 +840,16 @@ def embedding_dedup_sink(df: DataFrame, path: str, checkpoint: str,
     The vector store is bucketed by the blocking key
     (``sources/layout.py``), so the probe's store side is a pruned
     bucketed scan with zero exchanges — same layout contract as the text
-    sinks. Here the block is the embeddings table's ``label``; at corpus
-    scale pass an LSH bucket column (``operators/similarity.
+    sinks (tests pin the plan of ``earlier_partitions``, the probe read).
+    Here the block is the embeddings table's ``label``; at corpus scale
+    pass an LSH bucket column (``operators/similarity.
     hyperplane_bucket``) as ``block_col`` — same store, same plan, recall
     becomes the banding probability instead of exact. Replay: replace-
     own-partition + stale-future sweep, the family recipe.
     """
     from ..functions.vectors import l2_norm, pair_cosine_lookup
     from ..sources.layout import (
-        replace_batch_partition, replace_store_partition,
+        earlier_partitions, replace_batch_partition, replace_store_partition,
     )
 
     vec_path = f"{path}/vectors"
@@ -919,17 +887,19 @@ def embedding_dedup_sink(df: DataFrame, path: str, checkpoint: str,
         vecs = cur.select(F.col(id_col).alias("__vid"),
                           F.col(vec_col).alias("__vec"))
         pairs = None
-        store = _vector_store_probe(spark, vec_path, batch_id,
-                                    id_col, block_col, vec_col)
+        store = earlier_partitions(spark, vec_path, block_col, batch_id,
+                                   store_buckets)
         if store is not None:      # store absent only on the first batch
             pairs = (keys.toDF("new_id", "__block")
-                     .join(store.select("old_id", "__block"), "__block")
+                     .join(store.select(F.col(id_col).alias("old_id"),
+                                        F.col(block_col).alias("__block")),
+                           "__block")
                      .filter(F.col("new_id") != F.col("old_id"))
                      .select(F.least("new_id", "old_id").alias("a_id"),
                              F.greatest("new_id", "old_id").alias("b_id")))
             vecs = vecs.unionByName(
-                store.select(F.col("old_id").alias("__vid"),
-                             F.col("old_vec").alias("__vec")))
+                store.select(F.col(id_col).alias("__vid"),
+                             F.col(vec_col).alias("__vec")))
         within = (keys.toDF("a_id", "__block")
                   .join(keys.toDF("b_id", "__block2"),
                         (F.col("__block") == F.col("__block2"))
@@ -1009,7 +979,7 @@ def embedding_dedup_multiband_sink(df: DataFrame, path: str,
     from ..functions.vectors import l2_norm, pair_cosine_lookup
     from ..operators.similarity import banded_projection
     from ..sources.layout import (
-        open_store, replace_batch_partition, replace_store_partition,
+        earlier_partitions, replace_batch_partition, replace_store_partition,
     )
 
     band_path = f"{path}/bands"
@@ -1046,13 +1016,11 @@ def embedding_dedup_multiband_sink(df: DataFrame, path: str,
                         & (F.col("a_id") < F.col("b_id")))
                   .select("a_id", "b_id"))
         cand = within
-        band_table = open_store(spark, band_path, ["band", "val"],
-                                store_buckets)
-        if band_table is not None:   # absent only on the first batch
-            store_b = (spark.table(band_table)
-                       .filter(F.col("batch_id") < F.lit(batch_id))
-                       .select(F.col("band"), F.col("val"),
-                               F.col(id_col).alias("old_id")))
+        store_b = earlier_partitions(spark, band_path, ["band", "val"],
+                                     batch_id, store_buckets)
+        if store_b is not None:      # absent only on the first batch
+            store_b = store_b.select(F.col("band"), F.col("val"),
+                                     F.col(id_col).alias("old_id"))
             cross = (cur_b.toDF("new_id", "band", "val")
                      .join(store_b, ["band", "val"])
                      .filter(F.col("new_id") != F.col("old_id"))
@@ -1063,13 +1031,12 @@ def embedding_dedup_multiband_sink(df: DataFrame, path: str,
         cand = cand.distinct()
         vecs = cur.select(F.col(id_col).alias("__vid"),
                           F.col(vec_col).alias("__vec"))
-        vec_table = open_store(spark, vec_path, id_col, store_buckets)
-        if vec_table is not None:
+        store_v = earlier_partitions(spark, vec_path, id_col, batch_id,
+                                     store_buckets)
+        if store_v is not None:
             vecs = vecs.unionByName(
-                spark.table(vec_table)
-                .filter(F.col("batch_id") < F.lit(batch_id))
-                .select(F.col(id_col).alias("__vid"),
-                        F.col(vec_col).alias("__vec")))
+                store_v.select(F.col(id_col).alias("__vid"),
+                               F.col(vec_col).alias("__vec")))
         # exact-cosine verify WITHOUT attaching vectors to the deduped
         # candidate pairs: pair_cosine_lookup streams only the 16-byte id
         # pairs through the Python boundary and gathers vectors from a
@@ -1094,28 +1061,6 @@ def embedding_dedup_multiband_sink(df: DataFrame, path: str,
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-
-
-def _vector_store_probe(spark: SparkSession, vec_location: str,
-                        batch_id: int, id_col: str, block_col: str,
-                        vec_col: str) -> DataFrame | None:
-    """The vector-store probe side for ``embedding_dedup_sink``'s
-    micro-batch N: strictly-earlier partitions of the bucketed-by-block
-    store, renamed for the probe join. Bucketed scan, zero exchanges on
-    this side (the family plan contract). The store carries each
-    vector's pre-staged L2 norm (``__nrm``) so the probe's cosine is one
-    dot fold per pair, never a per-pair norm recomputation."""
-    from ..sources.layout import open_store
-
-    table = open_store(spark, vec_location, block_col)
-    if table is None:
-        return None
-    return (spark.table(table)
-            .filter(F.col("batch_id") < F.lit(batch_id))
-            .select(F.col(id_col).alias("old_id"),
-                    F.col(block_col).alias("__block"),
-                    F.col(vec_col).alias("old_vec"),
-                    F.col("__nrm").alias("__old_nrm")))
 
 
 def read_embedding_flags(spark: SparkSession, path: str) -> DataFrame:

@@ -255,6 +255,32 @@ def test_concurrent_arms_live_only_in_session():
     assert not hits, hits
 
 
+def test_strictly_earlier_read_lives_only_in_layout():
+    """Ratchet: the store probe's ``batch_id < N`` filter is the rule that
+    makes cross-batch discovery exactly-once; it lives in
+    ``sources/layout.py::earlier_partitions``. A sink that writes its own
+    copy can drift to ``!=`` or lose the seed partition."""
+    hits = _source_hits(r"< F\.lit\(batch_id\)", "sources/layout.py")
+    assert not hits, hits
+
+
+def test_available_now_trigger_lives_only_in_sinks():
+    """Ratchet: every availableNow drain starts through
+    ``streaming/sinks.py::run_available_now``."""
+    hits = _source_hits(r"availableNow=True", "streaming/sinks.py")
+    assert not hits, hits
+
+
+def test_scratch_dirs_live_only_in_pipeline():
+    """Ratchet: scratch roots for drains are opened by
+    ``streaming/pipeline.py`` (``drain_through_store``,
+    ``drain_stream_to_parquet``), which delete them even when the drain
+    raises. Any other module's ``mkdtemp`` is a hand-copied drain."""
+    hits = _source_hits(r"mkdtemp|TemporaryDirectory",
+                        "streaming/pipeline.py")
+    assert not hits, hits
+
+
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     """A filter on a joined dim must prune the fact's partition directories
     at runtime (DPP) — the mechanism that makes dim-filtered star joins
@@ -723,6 +749,28 @@ class TestIncrementalBucketedStore:
         assert left == {-1, 0, 1}
         assert spark.table(table).count() == 40 + 10 + 5
         spark.sql(f"DROP TABLE {table}")
+
+    def test_earlier_partitions_reads_strictly_earlier_and_seed(
+            self, spark, tmp_path):
+        """The probe read for batch N sees exactly the partitions below N
+        — the ``batch_id=-1`` seed included, N itself and later ones
+        excluded — and ``None`` while the store does not exist."""
+        from social_media_sentiment_analysis_spark.sources.layout import (
+            earlier_partitions, replace_store_partition, store_table_name,
+        )
+
+        loc = str(tmp_path / "store")
+        assert earlier_partitions(spark, loc, "h", 1, n_buckets=4) is None
+        for bid in (-1, 0, 1, 2):
+            replace_store_partition(
+                spark, spark.range(1).select(
+                    F.lit(f"h{bid}").alias("h"),
+                    F.lit(bid).cast("long").alias("doc_id")),
+                loc, bid, "h", n_buckets=4)
+        got = earlier_partitions(spark, loc, "h", 1, n_buckets=4)
+        assert sorted((r.doc_id, r.batch_id) for r in got.collect()) \
+            == [(-1, -1), (0, 0)]
+        spark.sql(f"DROP TABLE {store_table_name(loc)}")
 
 
 class TestIncrementalWinnowIndex:

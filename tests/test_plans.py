@@ -12,6 +12,7 @@ from social_media_sentiment_analysis_spark.plans.inspect import (
     has_broadcast_join,
     has_sort_merge_join,
     is_top_k,
+    physical_plan,
     pushed_filters,
     scan_schemas,
 )
@@ -20,6 +21,19 @@ from social_media_sentiment_analysis_spark.queries.registry import QUERIES
 
 def q(name, spark, sf_dir):
     return QUERIES[name].builder(spark, sf_dir)
+
+
+@pytest.fixture(scope="module")
+def registry_frames(spark, sf_dir):
+    """Every registry query, built once for the four registry-wide plan
+    walks (a build runs the query's eager drains and checkpoints). Each
+    frame is planned as soon as it is built, as the walks always did;
+    the QueryExecution keeps that plan for every later walk."""
+    frames = {}
+    for name, query in QUERIES.items():
+        frames[name] = query.builder(spark, sf_dir)
+        physical_plan(frames[name])
+    return frames
 
 
 def test_star_joins_broadcast_small_dims(spark, sf_dir):
@@ -75,13 +89,9 @@ def test_curation_funnel_prunes_and_single_exchange(spark, sf_dir):
     assert exchange_count(df) <= 1
 
 
-def test_no_cartesian_anywhere(spark, sf_dir):
-    from social_media_sentiment_analysis_spark.plans.inspect import (
-        physical_plan,
-    )
-
-    for name, query in QUERIES.items():
-        plan = physical_plan(query.builder(spark, sf_dir))
+def test_no_cartesian_anywhere(registry_frames):
+    for name, df in registry_frames.items():
+        plan = physical_plan(df)
         if name == "recommend_parts":
             # MLlib recommendForUserSubset scores via a deliberate
             # block-cross of the (tiny) user × item factor matrices —
@@ -157,7 +167,7 @@ _GLOBAL_WINDOW_BOUNDED = {
 }
 
 
-def test_no_unbounded_partitionless_window_anywhere(spark, sf_dir):
+def test_no_unbounded_partitionless_window_anywhere(registry_frames):
     """Registry-wide scale invariant (round-3 verdict item): no query may
     plan a partition-less window over an input that grows with the corpus.
     The allowlist above enumerates the justified-bounded cases; a NEW name
@@ -169,8 +179,8 @@ def test_no_unbounded_partitionless_window_anywhere(spark, sf_dir):
     )
 
     offenders = {}
-    for name, query in QUERIES.items():
-        got = partitionless_windows(query.builder(spark, sf_dir))
+    for name, df in registry_frames.items():
+        got = partitionless_windows(df)
         if got and name not in _GLOBAL_WINDOW_BOUNDED:
             offenders[name] = got
     assert not offenders, offenders
@@ -330,7 +340,7 @@ def test_new_retrieval_and_q20_plan_contracts(spark, sf_dir):
     assert is_top_k(hs) or "TakeOrdered" in physical_plan(hs)
 
 
-def test_exchange_counts_do_not_regress(spark, sf_dir):
+def test_exchange_counts_do_not_regress(registry_frames):
     """Registry-wide exchange-count ratchet (r3 verdict #7): every query's
     shuffle count is pinned in tests/plan_snapshot.json (generated by
     tools/plan_snapshot.py under these exact conditions). A count ABOVE the
@@ -345,8 +355,8 @@ def test_exchange_counts_do_not_regress(spark, sf_dir):
     snap_path = Path(__file__).parent / "plan_snapshot.json"
     snapshot = json.loads(snap_path.read_text())
     regressed, improved, new = {}, {}, []
-    for name, query in QUERIES.items():
-        got = exchange_count(query.builder(spark, sf_dir))
+    for name, df in registry_frames.items():
+        got = exchange_count(df)
         pinned = snapshot.get(name)
         if pinned is None:
             new.append(name)
@@ -485,7 +495,7 @@ BROADCAST_LINT_ALLOWED = {
 }
 
 
-def test_no_forced_broadcast_of_corpus_frames(spark, sf_dir):
+def test_no_forced_broadcast_of_corpus_frames(registry_frames):
     """r5 verdict #2: an explicit broadcast() hint overrides the planner's
     size check, so a hint on a corpus-cardinality frame (one row per
     document/order/event — q_winnow_containment's pre-r6 sizes table) OOMs
@@ -497,8 +507,8 @@ def test_no_forced_broadcast_of_corpus_frames(spark, sf_dir):
     )
 
     unlisted = {}
-    for name, query in QUERIES.items():
-        hits = broadcast_violations(query.builder(spark, sf_dir))
+    for name, df in registry_frames.items():
+        hits = broadcast_violations(df)
         if hits and name not in BROADCAST_LINT_ALLOWED:
             unlisted[name] = [str(h) for h in hits]
     assert not unlisted, (

@@ -1279,17 +1279,14 @@ def test_embedding_dedup_multiband_sink_matches_batch_twin(
     # plan contract: the banded store side of the probe join reads
     # bucketed by (band, val) with zero exchanges
     from social_media_sentiment_analysis_spark.sources.layout import (
-        open_store,
+        earlier_partitions,
     )
-    table = open_store(spark, f"{out}/bands", ["band", "val"], 16)
-    assert table is not None
+    store = earlier_partitions(spark, f"{out}/bands", ["band", "val"], 2, 16)
+    assert store is not None
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = (spark.table(table)
-                 .filter(F.col("batch_id") < 2)
-                 .select("band", "val",
-                         F.col("vec_id").alias("old_id")))
+        probe = store.select("band", "val", F.col("vec_id").alias("old_id"))
         join = (spark.read.parquet(f"{out}/bands/batch_id=2")
                 .select("band", "val", "vec_id").join(probe,
                                                       ["band", "val"]))
@@ -1489,9 +1486,12 @@ def test_sink_store_probes_read_bucketed_exchange_free(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from social_media_sentiment_analysis_spark.sources.layout import (
+        earlier_partitions,
+    )
     from social_media_sentiment_analysis_spark.streaming.sinks import (
-        _band_store_probe, _chunk_store_probe, _fp_store_probe,
-        near_dedup_sink, rewrite_dedup_sink, winnow_containment_sink,
+        _fp_store_probe, near_dedup_sink, rewrite_dedup_sink,
+        winnow_containment_sink,
     )
 
     filler = ("structured streaming maintains incremental state across "
@@ -1521,8 +1521,11 @@ def test_sink_store_probes_read_bucketed_exchange_free(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        bands = _band_store_probe(spark, f"{nd}/bands", 3)
-        chunks = _chunk_store_probe(spark, f"{rw}/chunks", 3)
+        bands = earlier_partitions(spark, f"{nd}/bands",
+                                   ["band", "band_hash"], 3) \
+            .select("band", "band_hash")
+        chunks = earlier_partitions(spark, f"{rw}/chunks", "h", 3) \
+            .select("h").distinct()
         fps = _fp_store_probe(spark, f"{wc}/fps", f"{wc}/fp_stats",
                               3, 50, "doc_id")
         cases = {
@@ -1555,11 +1558,16 @@ def test_compact_store_preserves_decisions_and_plan(spark, tmp_path):
     import re as _re
 
     from social_media_sentiment_analysis_spark.sources.layout import (
-        compact_store,
+        compact_store, earlier_partitions,
     )
     from social_media_sentiment_analysis_spark.streaming.sinks import (
-        _chunk_store_probe, read_rewritten_corpus, rewrite_dedup_sink,
+        read_rewritten_corpus, rewrite_dedup_sink,
     )
+
+    def chunk_probe(location):
+        # the rewrite sink's probe side: distinct earlier fingerprints
+        return earlier_partitions(spark, location, "h", 99) \
+            .select("h").distinct()
 
     c1 = "alpha beta gamma delta epsilon zeta"
     c2 = "one two three four five six"
@@ -1588,7 +1596,7 @@ def test_compact_store_preserves_decisions_and_plan(spark, tmp_path):
         (r.doc_id, r.cleaned_text, r.n_kept)
         for r in read_rewritten_corpus(spark, out).collect())
     probe_before = sorted(
-        r.h for r in _chunk_store_probe(spark, chunks, 99).collect())
+        r.h for r in chunk_probe(chunks).collect())
 
     # every batch < 3 is committed (availableNow drained) — fold them
     parts_before, parts_after = compact_store(spark, chunks, "h",
@@ -1596,9 +1604,9 @@ def test_compact_store_preserves_decisions_and_plan(spark, tmp_path):
     assert parts_before == 3 and parts_after == 1
 
     probe_after = sorted(
-        r.h for r in _chunk_store_probe(spark, chunks, 99).collect())
+        r.h for r in chunk_probe(chunks).collect())
     assert probe_after == probe_before
-    plan = (_chunk_store_probe(spark, chunks, 99)
+    plan = (chunk_probe(chunks)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Bucketed: true" in plan and not _re.search(r"\bExchange\b", plan)
 
@@ -1746,8 +1754,11 @@ def test_embedding_dedup_sink_flags_cross_batch_neardups(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from social_media_sentiment_analysis_spark.sources.layout import (
+        earlier_partitions,
+    )
     from social_media_sentiment_analysis_spark.streaming.sinks import (
-        _vector_store_probe, embedding_dedup_sink, read_embedding_flags,
+        embedding_dedup_sink, read_embedding_flags,
     )
 
     def row(vid, label, vec):
@@ -1794,8 +1805,10 @@ def test_embedding_dedup_sink_flags_cross_batch_neardups(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        probe = _vector_store_probe(spark, f"{out}/vectors", 3,
-                                    "vec_id", "label", "embedding")
+        probe = earlier_partitions(spark, f"{out}/vectors", "label", 3) \
+            .select(F.col("vec_id").alias("old_id"),
+                    F.col("label").alias("__block"),
+                    F.col("embedding").alias("old_vec"))
         join = (spark.read.parquet(f"{out}/vectors/batch_id=0")
                 .withColumnRenamed("label", "__block").join(probe, "__block"))
         plan = join._jdf.queryExecution().executedPlan().toString()
@@ -1955,3 +1968,32 @@ def test_drain_to_df_single_partition_and_conf_restored(spark, stream_input):
     assert got.rdd.getNumPartitions() == 1
     rows = {r.language: r["count"] for r in got.collect()}
     assert rows["en"] >= 3   # the fixture's English envelopes survive
+
+
+def test_drain_to_parquet_removes_scratch_dir_when_drain_raises(
+        spark, tmp_path):
+    """A drain whose micro-batch raises must propagate the failure AND
+    delete its scratch directory — the failure path is exactly when a
+    leaked ``{name_prefix}_*`` directory would pile up unnoticed."""
+    import glob
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from social_media_sentiment_analysis_spark.streaming.pipeline import (
+        drain_stream_to_parquet,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.jsonl").write_text(json.dumps({"k": "x"}) + "\n")
+    agg = (spark.readStream.schema("k string").json(str(src))
+           .groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+           .select("k", F.when(F.col("n") > 0,
+                               F.raise_error(F.lit("drain boom")))
+                   .otherwise(F.col("n")).alias("n")))
+    prefix = f"leakprobe_{uuid.uuid4().hex[:8]}"
+    with pytest.raises(StreamingQueryException, match="drain boom"):
+        drain_stream_to_parquet(agg, prefix)
+    assert not glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}_*"))
