@@ -39,6 +39,18 @@ def token_count(col: Column) -> Column:
     return F.when(col == "", F.lit(0)).otherwise(F.size(tokens(col)))
 
 
+def token_chunks(toks: Column, k: int) -> Column:
+    """The chunk layout: a token array's non-overlapping ``k``-token
+    windows, in order, the last one ragged. A transform over a sequence of
+    window offsets, so chunking stays map-side (posexplode the result for
+    one row per chunk). Callers drop empty texts first: ``tokens('')`` is
+    one empty token, which would become a one-token chunk."""
+    n = F.size(toks)
+    return F.transform(
+        F.sequence(F.lit(0), F.floor((n - F.lit(1)) / F.lit(k))),
+        lambda i: F.slice(toks, i * k + 1, k))
+
+
 # BPE-style pre-tokenizer classes: letter runs, digit runs, punctuation runs
 # (the unit a byte-pair tokenizer would merge within — GPT-2's pre-tokenizer
 # splits the same three classes before BPE merges). Shared dialect subset of

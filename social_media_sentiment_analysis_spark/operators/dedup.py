@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles, tokens
+from ..functions.text import fingerprint, shingles, token_chunks, tokens
 
 # ---------------------------------------------------------------------------
 # Exact dedup (hash-groupBy)
@@ -69,16 +69,37 @@ def chunk_rows(df: DataFrame, text_col: str, id_col: str,
     batch and incremental policies provably act on the same chunk set)."""
     docs = (df.filter(F.col(text_col) != "")
             .select(F.col(id_col), tokens(F.col(text_col)).alias("toks")))
-    n = F.size("toks")
-    chunk_arrays = F.transform(
-        F.sequence(F.lit(0), F.floor((n - F.lit(1)) / F.lit(k))),
-        lambda i: F.slice(F.col("toks"), i * k + 1, k))
     return (docs
             .select(id_col,
-                    F.posexplode(chunk_arrays).alias("chunk_id", "chunk"))
+                    F.posexplode(token_chunks(F.col("toks"), k))
+                    .alias("chunk_id", "chunk"))
             .select(id_col, "chunk_id",
                     F.size("chunk").cast("long").alias("n_toks"),
                     F.concat_ws(" ", F.col("chunk")).alias("txt")))
+
+
+#: Curation policy shared by the batch ``curation_pipeline`` /
+#: ``chunk_documents`` queries and ``streaming/curation.py``: training
+#: chunks are CHUNK_TOKENS-token windows of documents that have at least
+#: MIN_DOC_TOKENS tokens.
+CHUNK_TOKENS = 50
+MIN_DOC_TOKENS = 10
+
+
+def curation_gate(docs: DataFrame, lang: str = "en") -> DataFrame:
+    """The curation gate over a (batch or streaming) frame carrying
+    ``lang`` and ``cleaned_text``: keep ``lang`` documents whose cleaned
+    text is non-empty and has at least MIN_DOC_TOKENS tokens; add ``toks``
+    (the token array the chunker windows) and ``content_fp`` (the exact
+    dedup key). Map-side only — each caller applies its own dedup on
+    ``content_fp`` (keep-first window in batch, watermarked
+    ``dropDuplicatesWithinWatermark`` on a stream)."""
+    return (
+        docs.filter((F.col("lang") == lang) & (F.col("cleaned_text") != ""))
+        .withColumn("toks", tokens(F.col("cleaned_text")))
+        .filter(F.size("toks") >= MIN_DOC_TOKENS)
+        .withColumn("content_fp", fingerprint(F.col("cleaned_text")))
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,92 +1,20 @@
-"""Grouped-map operators (``applyInPandas``) — the per-group imperative
-escape hatch, with Column twins pinning semantics.
+"""Grouped aggregates Spark lacks as built-ins, written as Column
+expressions so they stay in whole-stage codegen.
 
-``applyInPandas`` hands each group to Python as one pandas DataFrame: the
-right shape when per-group logic is genuinely imperative (model fit per
-key, dynamic programming over a session, scipy calls). For anything a
-window can express, the window IS the fast path — it never materializes a
-whole group in one worker's memory and never leaves codegen. The z-score
-pair below exists to pin that equivalence in tests and to be the template
-for real per-group Python; its docstring is the decision rule.
-
-Scale caveat the API hides: one group = one pandas frame in one task, so a
-hot key materializes entirely (contrast mapInPandas, which streams batches
-regardless of keys). Salt or pre-aggregate pathological keys first.
+A per-group aggregate that reduces to built-ins (here the geometric mean,
+exp∘avg∘ln) never needs a Python crossing: a grouped-agg pandas UDF or an
+``applyInPandas`` group map would ship every group to a Python worker —
+one whole group per task, so a hot key materializes entirely — for the
+same result.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def zscore_per_group_pandas(df: DataFrame, group_col: str,
-                            value_col: str) -> DataFrame:
-    """Per-group z-score via applyInPandas (ddof=0, matching stddev_pop).
-
-    Output: input columns + ``zscore``. Groups with zero variance emit 0.0
-    (the convention both twins share)."""
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("zscore", DoubleType())])
-
-    def norm(pdf):
-        import numpy as np
-
-        v = pdf[value_col].astype("float64")
-        std = float(v.std(ddof=0))
-        pdf = pdf.copy()
-        pdf["zscore"] = np.round(
-            (v - float(v.mean())) / std if std > 0 else v * 0.0, 4)
-        return pdf
-
-    return df.groupBy(group_col).applyInPandas(norm, schema=out_schema)
-
-
-def zscore_per_group_window(df: DataFrame, group_col: str,
-                            value_col: str) -> DataFrame:
-    """Column/window twin: same math, no Python, no whole-group
-    materialization — the production path."""
-    w = Window.partitionBy(group_col)
-    mean = F.avg(value_col).over(w)
-    std = F.stddev_pop(value_col).over(w)
-    return df.withColumn(
-        "zscore",
-        F.round(F.when(std > 0, (F.col(value_col) - mean) / std)
-                .otherwise(F.lit(0.0)), 4))
-
-
-def geomean_udaf():
-    """Grouped-aggregate pandas UDF (the Arrow UDAF surface): geometric
-    mean of a double column. The third Arrow crossing pattern this engine
-    exercises (scalar pandas UDF, applyInPandas grouped-map, and this —
-    grouped-agg), provided as the template for aggregates Spark lacks.
-
-    Always pin such a UDAF to a Column twin where one exists —
-    ``geomean_column`` is exp(avg(ln)) and stays in whole-stage codegen;
-    the UDAF exists for the aggregates that do NOT reduce to built-ins
-    (e.g. streaming quantile sketches over unsortable payloads).
-    """
-    import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit functionType: this module uses `from __future__ import
-    # annotations`, which stringifies type hints and defeats inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geomean(v):
-        arr = np.asarray(v, dtype="float64")
-        arr = arr[arr > 0]
-        if arr.size == 0:
-            return float("nan")
-        return float(np.exp(np.log(arr).mean()))
-
-    return geomean
-
-
 def geomean_column(col):
-    """Column-expression twin: exp(avg(ln(x))) over positive values —
-    identical semantics, zero Python crossings."""
+    """Geometric mean over positive values: exp(avg(ln(x))) — zero Python
+    crossings (``type_value_geomean``'s DuckDB oracle pins it)."""
     positive = F.when(F.col(col) > 0, F.log(F.col(col)))
     return F.exp(F.avg(positive))

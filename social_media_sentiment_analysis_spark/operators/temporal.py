@@ -1,4 +1,4 @@
-"""Temporal operators Spark lacks natively: as-of join and batch
+"""Temporal operators Spark lacks natively: as-of join and
 sessionization helpers.
 
 The as-of (point-in-time) join is the classic time-series operator — for
@@ -90,10 +90,13 @@ def as_of_join(left: DataFrame, right: DataFrame, on: str,
 
 def session_rollup(df: DataFrame, key: str, ts: str, gap: str,
                    aggs: list) -> DataFrame:
-    """Batch sessionization via Spark's native session_window: events for a
-    key belong to one session while each is < gap after the previous
-    (window end = last event + gap). One shuffle on the key; at scale this
-    is the built-in, state-free form of the gaps-and-islands pattern."""
+    """Sessionization of a batch or watermarked stream via Spark's native
+    session_window: events for a key belong to one session while each is
+    < gap after the previous (window end = last event + gap). One shuffle
+    on the key; at scale this is the built-in, state-free form of the
+    gaps-and-islands pattern. On a stream (append mode) the session merge
+    stays JVM-side in the streaming aggregation, and a session is emitted
+    once the watermark passes its end, which also evicts its state."""
     return (
         df.groupBy(F.session_window(F.col(ts), gap).alias("__w"), F.col(key))
         .agg(*aggs)

@@ -10,7 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import clean_text, lang_id_column, quality_columns, quality_enrich, tokens
+from ..functions.text import (
+    clean_text, lang_id_column, quality_columns, quality_enrich, token_chunks,
+    tokens,
+)
 from ..functions import vectors
 from ..operators import dedup as dd
 from ..operators import similarity as sim
@@ -1047,9 +1050,6 @@ ORDER BY source
 """
 
 
-_CHUNK_TOKENS = 50
-
-
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence chunking for training: split each document's token stream
     into fixed 50-token windows (last chunk ragged), one output row per
@@ -1058,12 +1058,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole op is map-side (zero shuffles): chunking 100 TB is one scan."""
     docs = _docs(spark, sf_dir).filter(F.col("cleaned_text") != "").select(
         "doc_id", tokens(F.col("cleaned_text")).alias("toks"))
-    n = F.size("toks")
-    chunks = F.transform(
-        F.sequence(F.lit(0),
-                   F.floor((n - F.lit(1)) / F.lit(_CHUNK_TOKENS))),
-        lambda i: F.slice(F.col("toks"),
-                          i * _CHUNK_TOKENS + 1, _CHUNK_TOKENS))
+    chunks = token_chunks(F.col("toks"), dd.CHUNK_TOKENS)
     return (
         docs
         .select("doc_id", F.posexplode(chunks).alias("chunk_id", "chunk"))
@@ -1084,10 +1079,10 @@ ORACLE_CHUNK_DOCUMENTS = _SQL_DOCS + f"""
 ), chunked AS (
     SELECT doc_id,
            i AS chunk_id,
-           toks[(i * {_CHUNK_TOKENS} + 1):((i + 1) * {_CHUNK_TOKENS})] AS chunk
+           toks[(i * {dd.CHUNK_TOKENS} + 1):((i + 1) * {dd.CHUNK_TOKENS})] AS chunk
     FROM toked,
          LATERAL unnest(range(0,
-             CAST(floor((len(toks) - 1) / {_CHUNK_TOKENS}) AS BIGINT) + 1))
+             CAST(floor((len(toks) - 1) / {dd.CHUNK_TOKENS}) AS BIGINT) + 1))
          AS t(i)
 )
 SELECT doc_id,
@@ -1701,9 +1696,6 @@ ORDER BY k.source
 """
 
 
-_MIN_DOC_TOKENS = 10
-
-
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone: an end-to-end curation pipeline as ONE declarative
     plan — language filter → length gate → exact dedup (keep-first per
@@ -1712,25 +1704,14 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint and the final per-source aggregate; filtering and chunking
     are map-side. This is the composition story: every stage is the same
     Column algebra the standalone queries use, so the fused pipeline needs
-    no materialization between stages."""
-    from pyspark.sql import Window
-
-    toked = (
-        _docs(spark, sf_dir)
-        .filter((F.col("lang") == "en") & (F.col("cleaned_text") != ""))
-        .select("doc_id", "source", "cleaned_text",
-                tokens(F.col("cleaned_text")).alias("toks"))
-        .filter(F.size("toks") >= _MIN_DOC_TOKENS)
-    )
-    w = Window.partitionBy(F.md5(F.col("cleaned_text"))).orderBy("doc_id")
-    keepers = (toked.withColumn("rn", F.row_number().over(w))
+    no materialization between stages. The gate (``dd.curation_gate``) and
+    chunker (``token_chunks``) are also the stages of the streaming
+    ``streaming/curation.py::curate_doc_stream``."""
+    w = Window.partitionBy("content_fp").orderBy("doc_id")
+    keepers = (dd.curation_gate(_docs(spark, sf_dir))
+               .withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") == 1))
-    n = F.size("toks")
-    chunks = F.transform(
-        F.sequence(F.lit(0),
-                   F.floor((n - F.lit(1)) / F.lit(_CHUNK_TOKENS))),
-        lambda i: F.slice(F.col("toks"), i * _CHUNK_TOKENS + 1,
-                          _CHUNK_TOKENS))
+    chunks = token_chunks(F.col("toks"), dd.CHUNK_TOKENS)
     chunked = keepers.select(
         "source", F.posexplode(chunks).alias("chunk_id", "chunk"))
     return (
@@ -1750,7 +1731,7 @@ ORACLE_CURATION_PIPELINE = _SQL_DOCS + f"""
            string_split(cleaned_text, ' ') AS toks
     FROM docs
     WHERE lang = 'en' AND cleaned_text <> ''
-      AND len(string_split(cleaned_text, ' ')) >= {_MIN_DOC_TOKENS}
+      AND len(string_split(cleaned_text, ' ')) >= {dd.MIN_DOC_TOKENS}
 ), keepers AS (
     SELECT * FROM (
         SELECT *, row_number() OVER (
@@ -1759,10 +1740,10 @@ ORACLE_CURATION_PIPELINE = _SQL_DOCS + f"""
     WHERE rn = 1
 ), chunked AS (
     SELECT source, i AS chunk_id,
-           toks[(i * {_CHUNK_TOKENS} + 1):((i + 1) * {_CHUNK_TOKENS})] AS chunk
+           toks[(i * {dd.CHUNK_TOKENS} + 1):((i + 1) * {dd.CHUNK_TOKENS})] AS chunk
     FROM keepers,
          LATERAL unnest(range(0,
-             CAST(floor((len(toks) - 1) / {_CHUNK_TOKENS}) AS BIGINT) + 1))
+             CAST(floor((len(toks) - 1) / {dd.CHUNK_TOKENS}) AS BIGINT) + 1))
          AS t(i)
 )
 SELECT source,

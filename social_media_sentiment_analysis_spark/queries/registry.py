@@ -327,8 +327,8 @@ _ALL: list[Query] = [
           "cutoff)"),
     Query("type_value_geomean", shaping.q_type_value_geomean,
           shaping.ORACLE_TYPE_VALUE_GEOMEAN,
-          "geometric mean per group (Column twin of the grouped-agg "
-          "pandas UDAF)"),
+          "geometric mean per group (exp∘avg∘ln Column aggregate, no "
+          "Python crossing)"),
     Query("value_bars", windowed.q_value_bars,
           windowed.ORACLE_VALUE_BARS,
           "6-hour OHLC resampling bars (min_by/max_by on (ts,value) — one "

@@ -1163,10 +1163,9 @@ ORDER BY n_docs DESC, bucket
 
 
 def q_type_value_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geometric mean of positive event values per type — the Column twin
-    (exp∘avg∘ln, whole-stage codegen) of the grouped-agg pandas UDAF in
-    operators/grouped.py::geomean_udaf; row-for-row equality of the two
-    paths is pinned in tests. Geometric means are the right average for
+    """Geometric mean of positive event values per type, as a Column
+    aggregate (operators/grouped.py::geomean_column: exp∘avg∘ln, whole-stage
+    codegen, no Python crossing). Geometric means are the right average for
     multiplicative quantities (growth rates, quality ratios)."""
     from ..operators.grouped import geomean_column
 

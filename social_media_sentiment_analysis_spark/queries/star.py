@@ -93,10 +93,10 @@ def q_streaming_segment_engagement(spark: SparkSession,
     decimal-exact to be micro-batch-order-independent (same policy as
     streaming_hourly_rollup)."""
     from ..functions.rounding import decimal_sum, round_half_up
-    from ..sources.batch import load_events_stream
+    from ..sources.batch import load_table_stream
     from ..streaming.pipeline import drain_stream_to_df
 
-    stream = load_events_stream(spark, sf_dir)
+    stream = load_table_stream(spark, sf_dir, "events")
     customer = load_table(spark, sf_dir, "customer")
     joined = stream.join(
         F.broadcast(customer),

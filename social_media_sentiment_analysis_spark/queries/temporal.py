@@ -597,10 +597,10 @@ def q_streaming_rolling_distinct_hll(spark: SparkSession,
     boolean and fails the value hash.
     """
     from ..session import run_concurrently
-    from ..sources.batch import load_events_stream
+    from ..sources.batch import load_table_stream
     from ..streaming.pipeline import drain_stream_to_df
 
-    stream = load_events_stream(spark, sf_dir)
+    stream = load_table_stream(spark, sf_dir, "events")
     # duplicates are irrelevant to HLL (insert is idempotent), so the
     # stream needs no (day, user) dedup exchange — register merge absorbs
     # re-deliveries and micro-batch boundaries alike
@@ -1089,7 +1089,7 @@ FROM converters
 def q_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour × type rollup computed by STRUCTURED STREAMING and verified by
     the driver's batch SQL oracle: the events table is consumed as a
-    micro-batched file stream (``sources/batch.py::load_events_stream``),
+    micro-batched file stream (``sources/batch.py::load_table_stream``),
     aggregated with the same expressions as the batch ``hourly_rollup``,
     drained with an availableNow trigger through a foreachBatch parquet
     sink (distributed — the hour×type result grows with the time span, so
@@ -1104,10 +1104,10 @@ def q_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     data bounded), exercised by the streaming tests.
     """
     from ..functions.rounding import decimal_sum, round_half_up
-    from ..sources.batch import load_events_stream
+    from ..sources.batch import load_table_stream
     from ..streaming.pipeline import drain_stream_to_parquet
 
-    stream = load_events_stream(spark, sf_dir)
+    stream = load_table_stream(spark, sf_dir, "events")
     # decimal-exact sum + engine-exact rounding (functions/rounding.py):
     # double accumulation across micro-batches would otherwise differ from
     # the oracle's sequential sum at rounding boundaries

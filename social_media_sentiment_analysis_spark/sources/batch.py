@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -48,16 +49,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            df = df.withColumn("ts", F.expr(
-                "timestampadd(MICROSECOND, ts div 1000, "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
-        return df
+        return _events_ts_ntz(spark.read.parquet(table_path(sf_dir, name)))
     return spark.read.parquet(table_path(sf_dir, name))
+
+
+def _events_ts_ntz(events: DataFrame) -> DataFrame:
+    """``events`` with ``ts`` as TIMESTAMP_NTZ whichever encoding the file
+    has (see ``load_table``): a nanos-as-long ``ts`` is truncated to
+    microseconds; a native timestamp passes through unchanged. Branches on
+    the frame's schema, which for a file stream is the declared one."""
+    if not isinstance(events.schema["ts"].dataType, LongType):
+        return events
+    return events.withColumn("ts", F.expr(
+        "timestampadd(MICROSECOND, ts div 1000, "
+        "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
 
 
 def spread_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
@@ -121,8 +126,6 @@ def load_table_stream(spark: SparkSession, sf_dir: str,
     import shutil
     import tempfile
 
-    from pyspark.sql.types import LongType
-
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
@@ -161,13 +164,4 @@ def load_table_stream(spark: SparkSession, sf_dir: str,
             except OSError:
                 shutil.copyfile(path, link)
         df = spark.readStream.schema(raw_schema).format("parquet").load(stage)
-    if name == "events" and isinstance(raw_schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.expr(
-            "timestampadd(MICROSECOND, ts div 1000, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
-    return df
-
-
-def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Back-compat alias: the ``events`` table as a file stream."""
-    return load_table_stream(spark, sf_dir, "events")
+    return _events_ts_ntz(df) if name == "events" else df

@@ -8,7 +8,6 @@ from .pipeline import (
     enrich_tweet_stream,
     flatten_envelope,
     hourly_rollup_stream,
-    session_rollup_stream,
     parse_envelopes,
     read_kafka_stream,
     read_tweet_file_stream,
@@ -29,7 +28,6 @@ __all__ = [
     "enrich_tweet_stream",
     "flatten_envelope",
     "hourly_rollup_stream",
-    "session_rollup_stream",
     "parse_envelopes",
     "read_kafka_stream",
     "read_tweet_file_stream",

@@ -1,6 +1,8 @@
 """Streaming curation: the training-data pipeline (filter → content dedup →
-chunk) on a document STREAM — same Column algebra as the batch
-``curation_pipeline`` query, so batch and streaming curation cannot drift.
+chunk) on a document STREAM. The gate (``operators/dedup.py::
+curation_gate``) and the chunker (``functions/text.py::token_chunks``) are
+the functions the batch ``curation_pipeline`` query composes, so batch and
+streaming curation cannot drift; only the dedup differs.
 
 The cross-batch guarantee is the interesting part: dedup keys on the
 content fingerprint (md5 of cleaned text), so a document re-ingested in a
@@ -14,10 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import clean_text, tokens
-
-CHUNK_TOKENS = 50
-MIN_DOC_TOKENS = 10
+from ..functions.text import clean_text, token_chunks
+from ..operators.dedup import CHUNK_TOKENS, curation_gate
 
 
 def curate_doc_stream(docs: DataFrame, *, ts_col: str = "ts",
@@ -29,25 +29,17 @@ def curate_doc_stream(docs: DataFrame, *, ts_col: str = "ts",
     Stages: language + length gates (map-side) → watermarked
     dropDuplicates on content fingerprint (cross-batch exact dedup) →
     50-token sequence chunking (map-side posexplode)."""
-    toked = (
-        docs.withColumn("cleaned_text", clean_text(F.col("text")))
-        .filter((F.col("lang") == lang) & (F.col("cleaned_text") != ""))
-        .withColumn("toks", tokens(F.col("cleaned_text")))
-        .filter(F.size("toks") >= MIN_DOC_TOKENS)
-        .withColumn("content_fp", F.md5(F.col("cleaned_text")))
-    )
+    gated = curation_gate(
+        docs.withColumn("cleaned_text", clean_text(F.col("text"))), lang)
     # WithinWatermark variant: keyed on content_fp alone, plain
     # dropDuplicates would never evict state (eviction requires the
     # event-time column in the key list); this dedups on the fingerprint
     # while aging entries out past the watermark.
     deduped = (
-        toked.withWatermark(ts_col, watermark)
+        gated.withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["content_fp"])
     )
-    n = F.size("toks")
-    chunks = F.transform(
-        F.sequence(F.lit(0), F.floor((n - F.lit(1)) / F.lit(CHUNK_TOKENS))),
-        lambda i: F.slice(F.col("toks"), i * CHUNK_TOKENS + 1, CHUNK_TOKENS))
+    chunks = token_chunks(F.col("toks"), CHUNK_TOKENS)
     return (
         deduped.select(
             "doc_id", "source",

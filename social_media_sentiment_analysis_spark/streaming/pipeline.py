@@ -267,39 +267,6 @@ def trending_words_stream(enriched: DataFrame,
     )
 
 
-def session_rollup_stream(events: DataFrame, *,
-                          ts_col: str = "event_time",
-                          key_col: str = "author_id",
-                          gap: str = "30 minutes",
-                          watermark: str = "1 hour") -> DataFrame:
-    """Per-key session aggregation on the BUILT-IN ``session_window`` —
-    the declarative twin of the custom ``streaming/stateful.py``
-    sessionizer (applyInPandasWithState).
-
-    Both paths exist deliberately: session_window keeps the whole operator
-    JVM-side (merging session state inside the streaming aggregation — no
-    Python crossing, watermark evicts closed sessions), while the stateful
-    Python path is the template for session logic Spark can't express
-    (per-session ML features, custom timeout policies). Prefer this one
-    whenever plain gap-merge semantics suffice.
-
-    Output: one row per closed session (append mode) — key, session span,
-    event count.
-    """
-    if events.isStreaming and not _has_watermark(events):
-        events = events.withWatermark(ts_col, watermark)
-    return (
-        events
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("s"),
-                 F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col(key_col),
-                F.col("s.start").alias("session_start"),
-                F.col("s.end").alias("session_end"),
-                "n_events")
-    )
-
-
 #: State-store partition count for the availableNow DRAINS below. A
 #: stateful streaming aggregation opens/commits one state store per shuffle
 #: partition EVERY micro-batch, and the count is frozen into the checkpoint

@@ -1,18 +1,11 @@
-"""Custom stateful streaming operator: event-time sessionization via
-``applyInPandasWithState``.
+"""Custom stateful streaming operator: per-key running totals with
+TTL-bounded state via ``transformWithStateInPandas`` (state API v2).
 
-The batch twin (operators/temporal.py::session_rollup) uses the built-in
-session_window; the streaming form needs explicit state because a session
-closes only when the *watermark* passes last_event + gap — a condition no
-built-in aggregation expresses per arbitrary rollup. This is the pattern
-the engine uses for any custom stateful operator:
-
-- group state is a tiny fixed-width tuple (epoch-ms longs + counters),
-  bounded per key — no unbounded growth;
-- event-time timeouts tie state GC to the watermark (late data beyond the
-  watermark is dropped by Spark before it reaches the operator);
-- within-batch session splits are emitted immediately; only the tail
-  session per key waits in state for its timeout.
+This is the engine's one hand-written stateful operator, kept because no
+built-in has its state policy: an idle key's state expires by TTL instead
+of waiting on an event-time watermark. Gap-merge sessionization needs no
+such operator — ``operators/temporal.py::session_rollup``'s built-in
+``session_window`` runs unchanged on a watermarked stream.
 
 Arrow moves each group's rows as pandas batches, so the Python hop is
 per-group-per-batch, not per-row.
@@ -20,97 +13,7 @@ per-group-per-batch, not per-row.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
-
-OUTPUT_SCHEMA = (
-    "user_id bigint, session_start timestamp, session_end timestamp, "
-    "n_events bigint, total_value double"
-)
-# (session_start_ms, last_event_ms, n_events, total_value)
-STATE_SCHEMA = "start long, last long, n long, total double"
-
-_MS = 1_000_000  # pandas datetime64[ns] → ms divisor is 1e6
-
-
-def streaming_sessionize(events: DataFrame, gap_minutes: int = 30,
-                         key_col: str = "user_id", ts_col: str = "ts",
-                         value_col: str = "value") -> DataFrame:
-    """Watermarked per-key sessions: emits (key, start, end=last+gap, count,
-    value sum) when the watermark passes the session's close. Input must
-    already carry a watermark on ``ts_col``."""
-    gap_ms = gap_minutes * 60 * 1000
-
-    def _emit(key: tuple, st: tuple) -> "pd.DataFrame":
-        import pandas as pd
-
-        start, last, n, total = st
-        return pd.DataFrame({
-            "user_id": [key[0]],
-            "session_start": [pd.Timestamp(start, unit="ms")],
-            "session_end": [pd.Timestamp(last + gap_ms, unit="ms")],
-            "n_events": [n],
-            "total_value": [total],
-        })
-
-    def sessionize(key: tuple, pdfs: Iterator["pd.DataFrame"],
-                   state: GroupState) -> Iterator["pd.DataFrame"]:
-        if state.hasTimedOut:
-            st = state.get
-            state.remove()
-            yield _emit(key, st)
-            return
-        cur = state.get if state.exists else None
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            ts_ms = (pdf[ts_col].astype("int64") // _MS).tolist()
-            vals = pdf[value_col].tolist()
-            for t, v in zip(ts_ms, vals):
-                if cur is None:
-                    cur = (t, t, 1, float(v))
-                elif t - cur[1] > gap_ms:
-                    yield _emit(key, cur)     # within-batch session split
-                    cur = (t, t, 1, float(v))
-                else:
-                    cur = (cur[0], max(cur[1], t), cur[2] + 1,
-                           cur[3] + float(v))
-        if cur is not None:
-            close = cur[1] + gap_ms
-            # applyInPandasWithState does NOT filter late input rows (unlike
-            # built-in aggregations): a batch of late events can build a
-            # session that is already closeable — emit it now rather than
-            # registering a timeout behind the watermark (which throws)
-            if close <= state.getCurrentWatermarkMs():
-                if state.exists:
-                    state.remove()
-                yield _emit(key, cur)
-            else:
-                state.update(cur)
-                # close when the watermark passes last + gap
-                state.setTimeoutTimestamp(close)
-
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            sessionize,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (state API v2): per-key running engagement
-# totals with TTL-bounded state.
-# ---------------------------------------------------------------------------
 
 RUNNING_OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_value double"

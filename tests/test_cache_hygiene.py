@@ -31,7 +31,10 @@ under CPU contention (a judge-concurrent Spark session sharing the 32
 cores) two drains can give up at different depths and fake growth
 (observed r3 AND r4: pass 1 drained to 3, pass 2 stalled at 6; the
 survivors were dead-handle localCheckpoint RDDs both times, never a held
-persist). So this test NEVER fails on a two-pass comparison: any
+persist; a heap dump at a later stall of 12 showed the drain's own
+py4j-held ``getPersistentRDDs()`` map as their only strong referrer,
+which ``_drain`` now releases before each JVM GC). So this test NEVER
+fails on a two-pass comparison: any
 violation of the strict steady state (≤1: the JVM's last-execution slot)
 or any apparent growth routes through a third identical pass, and only
 ``third > counts[1]`` — growth sustained across three passes — fails,
@@ -85,14 +88,23 @@ def _drain(spark, no_progress_s: float = 75.0, hard_cap_s: float = 600.0) -> int
     is "no progress for ``no_progress_s``", which a loaded-but-healthy
     cleaner never trips, instead of a fixed wall budget (the r3 full-suite
     flake: 150 s was not enough with a second session contending for the
-    cores)."""
+    cores).
+
+    Each round frees Python proxies, then waits, then runs the JVM GC. The
+    count reads ``getPersistentRDDs()``, a JVM map holding every persisted
+    RDD strongly for as long as its py4j proxy is registered; the previous
+    round's proxy is freed by ``gc.collect()``, but py4j delivers the
+    JVM-side release asynchronously (its finalizer thread polls once a
+    second). A ``System.gc()`` issued before that release lands finds the
+    survivors reachable through the probe's own map, so the drain would
+    stall on RDDs that nothing else holds."""
     start = time.time()
     last_progress = start
     best = None
     while True:
         gc.collect()
-        spark.sparkContext._jvm.System.gc()
         time.sleep(1.5)
+        spark.sparkContext._jvm.System.gc()
         n = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
         if n <= 1:
             return n

@@ -281,6 +281,23 @@ def test_scratch_dirs_live_only_in_pipeline():
     assert not hits, hits
 
 
+def test_chunk_window_lives_only_in_text():
+    """Ratchet: the chunk layout (non-overlapping k-token windows, last one
+    ragged) is ``functions/text.py::token_chunks``. Any other module that
+    slices its own windows is a re-forked chunker that can drift from the
+    batch and streaming curation it must agree with."""
+    hits = _source_hits(r"lambda i: F\.slice\(", "functions/text.py")
+    assert not hits, hits
+
+
+def test_session_window_lives_only_in_temporal():
+    """Ratchet: sessionization is ``operators/temporal.py::session_rollup``
+    for batch and watermarked streams alike; a second ``session_window``
+    call site is a sessionizer twin."""
+    hits = _source_hits(r"session_window\(", "operators/temporal.py")
+    assert not hits, hits
+
+
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     """A filter on a joined dim must prune the fact's partition directories
     at runtime (DPP) — the mechanism that makes dim-filtered star joins

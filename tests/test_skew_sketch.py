@@ -72,32 +72,6 @@ def test_sketch_profile_accuracy(spark, sf_dir):
         assert a.p99_rank_ok is True
 
 
-class TestGroupedMap:
-    """applyInPandas grouped map must equal its window twin row-for-row —
-    the template proving when (not) to leave Column land."""
-
-    def test_zscore_twins_agree(self, spark, sf_dir):
-        from social_media_sentiment_analysis_spark.operators.grouped import (
-            zscore_per_group_pandas, zscore_per_group_window,
-        )
-        from social_media_sentiment_analysis_spark.sources.batch import (
-            load_table,
-        )
-
-        events = load_table(spark, sf_dir, "events") \
-            .select("event_id", "event_type", "value")
-        a = zscore_per_group_pandas(events, "event_type", "value") \
-            .toPandas().sort_values("event_id").reset_index(drop=True)
-        b = zscore_per_group_window(events, "event_type", "value") \
-            .toPandas().sort_values("event_id").reset_index(drop=True)
-        assert len(a) == len(b) > 0
-        assert (a["zscore"] == b["zscore"]).all()
-        # z-scores are actually standardized per group
-        g = a.groupby("event_type")["zscore"]
-        assert (g.mean().abs() < 1e-3).all()
-        assert ((g.std(ddof=0) - 1).abs() < 1e-3).all()
-
-
 class TestCountMin:
     """Count-min sketch contracts: overestimate-only, bounded error,
     mergeability."""
@@ -150,31 +124,6 @@ class TestCountMin:
         single = {(r.row, r.bucket): r.cnt for r in
                   cms_build(words, "w").collect()}
         assert merged == single
-
-
-class TestGeomeanUDAF:
-    def test_udaf_matches_column_twin(self, spark, sf_dir):
-        from social_media_sentiment_analysis_spark.operators.grouped import (
-            geomean_column, geomean_udaf,
-        )
-        from social_media_sentiment_analysis_spark.sources.batch import (
-            load_table,
-        )
-
-        events = load_table(spark, sf_dir, "events")
-        twin = {r.event_type: r.g for r in
-                events.groupBy("event_type")
-                .agg(F.round(geomean_column("value"), 6).alias("g"))
-                .collect()}
-        gm = geomean_udaf()
-        udaf = {r.event_type: r.g for r in
-                events.filter(F.col("value") > 0)
-                .groupBy("event_type")
-                .agg(F.round(gm(F.col("value")), 6).alias("g"))
-                .collect()}
-        assert set(twin) == set(udaf)
-        for k in twin:
-            assert abs(twin[k] - udaf[k]) < 1e-6, k
 
 
 def test_aqe_skew_join_split_fires(spark):

@@ -1,6 +1,8 @@
-"""Streaming sessionization (applyInPandasWithState) integration test: file
-stream in two micro-batches; batch 2's events advance the watermark past
-batch 1's sessions, firing their event-time timeouts."""
+"""Stateful streaming integration tests over a two-file JSONL stream read
+one file per micro-batch: sessionization with the built-in
+``session_window`` on a watermarked stream (``session_rollup``, the same
+operator the batch ``sessionization`` query uses), and the state-v2
+running-totals operator."""
 
 from __future__ import annotations
 
@@ -9,9 +11,10 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
-from social_media_sentiment_analysis_spark.streaming.stateful import (
-    streaming_sessionize,
+from social_media_sentiment_analysis_spark.operators.temporal import (
+    session_rollup,
 )
 
 BASE = "2024-01-15T{}:00"
@@ -24,17 +27,34 @@ def _write(dirpath, name, rows):
                 {"user_id": uid, "ts": BASE.format(hhmm), "value": v}) + "\n")
 
 
-def test_streaming_sessionize_two_batches(spark, tmp_path):
-    import os
-
+@pytest.mark.parametrize("first, second, expected", [
+    pytest.param(
+        # batch 1: u1 has two events 10 min apart; u2 one event. batch 2's
+        # far-future event advances the watermark (12:00 - 10 min = 11:50)
+        # past batch 1's session ends (10:40, 10:35), so those emit; u3's
+        # session is still open (no later watermark) and is not emitted.
+        [(1, "10:00", 1.0), (1, "10:10", 2.0), (2, "10:05", 5.0)],
+        [(3, "12:00", 9.0)],
+        [(1, 2, 3.0, "10:00", "10:40"), (2, 1, 5.0, "10:05", "10:35")],
+        id="two_batches"),
+    pytest.param(
+        # reversed arrival: the future event lands first and u1's events
+        # come in the later batch; u1's session is still emitted, not
+        # dropped, and u3's open session is not.
+        [(3, "12:00", 9.0)],
+        [(1, "10:00", 1.0), (1, "10:10", 2.0)],
+        [(1, 2, 3.0, "10:00", "10:40")],
+        id="late_batch"),
+])
+def test_session_rollup_on_watermarked_stream(spark, tmp_path, first,
+                                              second, expected):
+    """Rows (user_id, n_events, total_value, session_start, session_end),
+    where session_end = last event + 30 min gap: exactly the closed
+    sessions are emitted (append mode), once each."""
     src = tmp_path / "in"
     src.mkdir()
-    # batch 1: u1 has two events 10 min apart; u2 one event
-    _write(src, "a.jsonl", [(1, "10:00", 1.0), (1, "10:10", 2.0),
-                            (2, "10:05", 5.0)])
-    # batch 2: far-future event advances the watermark (12:00 - 10min delay
-    # = 11:50 watermark > 10:40/10:35 session closes) → batch-1 sessions emit
-    _write(src, "b.jsonl", [(3, "12:00", 9.0)])
+    _write(src, "a.jsonl", first)
+    _write(src, "b.jsonl", second)
     # deterministic batch order: the file source orders by modification time
     os.utime(src / "a.jsonl", (1_000_000, 1_000_000))
     os.utime(src / "b.jsonl", (2_000_000, 2_000_000))
@@ -45,56 +65,21 @@ def test_streaming_sessionize_two_batches(spark, tmp_path):
         .json(str(src))
         .withWatermark("ts", "10 minutes")
     )
-    sessions = streaming_sessionize(stream, gap_minutes=30)
+    sessions = session_rollup(
+        stream, "user_id", "ts", "30 minutes",
+        [F.count(F.lit(1)).alias("n_events"),
+         F.sum("value").alias("total_value")])
     name = "sess_" + uuid.uuid4().hex[:8]
     q = (
         sessions.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination()
-    rows = {r.user_id: r for r in spark.table(name).collect()}
-
-    # u3's session is still open in state (no later watermark) — not emitted
-    assert sorted(rows) == [1, 2]
-    u1 = rows[1]
-    assert u1.n_events == 2 and u1.total_value == 3.0
-    assert u1.session_start.strftime("%H:%M") == "10:00"
-    assert u1.session_end.strftime("%H:%M") == "10:40"    # last(10:10) + 30min
-    u2 = rows[2]
-    assert u2.n_events == 1 and u2.total_value == 5.0
-    assert u2.session_end.strftime("%H:%M") == "10:35"
-
-
-def test_streaming_sessionize_late_batch_emits_immediately(spark, tmp_path):
-    """Reversed arrival: the future event lands first, so the second batch's
-    events are LATE (behind the watermark). applyInPandasWithState passes
-    late rows through — the operator must emit the already-closeable session
-    instead of registering a past timeout."""
-    import os
-
-    src = tmp_path / "in"
-    src.mkdir()
-    _write(src, "a.jsonl", [(3, "12:00", 9.0)])
-    _write(src, "b.jsonl", [(1, "10:00", 1.0), (1, "10:10", 2.0)])
-    os.utime(src / "a.jsonl", (1_000_000, 1_000_000))
-    os.utime(src / "b.jsonl", (2_000_000, 2_000_000))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .withWatermark("ts", "10 minutes")
-    )
-    name = "sess_" + uuid.uuid4().hex[:8]
-    q = (
-        streaming_sessionize(stream, gap_minutes=30)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = {r.user_id: r for r in spark.table(name).collect()}
-    assert 1 in rows                     # late session emitted, not dropped
-    assert rows[1].n_events == 2 and rows[1].total_value == 3.0
+    rows = sorted((r.user_id, r.n_events, r.total_value,
+                   r.session_start.strftime("%H:%M"),
+                   r.session_end.strftime("%H:%M"))
+                  for r in spark.table(name).collect())
+    assert rows == expected
 
 
 def test_running_totals_state_v2(spark, tmp_path):
@@ -142,46 +127,3 @@ def test_running_totals_state_v2(spark, tmp_path):
     assert (1, 3, 7.0) in rows
     assert (2, 1, 5.0) in rows
     assert (1, 2, 3.0) in rows
-
-
-def test_builtin_session_window_matches_custom_sessionizer(spark, tmp_path):
-    """The declarative session_window path must produce the same sessions
-    (key, span, count) as the applyInPandasWithState sessionizer for plain
-    gap-merge semantics — same two-batch fixture, same watermark."""
-    import os
-
-    from social_media_sentiment_analysis_spark.streaming import (
-        session_rollup_stream,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    _write(src, "a.jsonl", [(1, "10:00", 1.0), (1, "10:10", 2.0),
-                            (2, "10:05", 5.0)])
-    _write(src, "b.jsonl", [(3, "12:00", 9.0)])
-    os.utime(src / "a.jsonl", (1_000_000, 1_000_000))
-    os.utime(src / "b.jsonl", (2_000_000, 2_000_000))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .withWatermark("ts", "10 minutes")
-    )
-    sessions = session_rollup_stream(
-        stream, ts_col="ts", key_col="user_id", gap="30 minutes")
-    name = "swin_" + uuid.uuid4().hex[:8]
-    q = (
-        sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = {r.user_id: r for r in spark.table(name).collect()}
-
-    # identical emission set and spans as the custom sessionizer's test
-    assert sorted(rows) == [1, 2]
-    assert rows[1].n_events == 2
-    assert rows[1].session_start.strftime("%H:%M") == "10:00"
-    assert rows[1].session_end.strftime("%H:%M") == "10:40"
-    assert rows[2].n_events == 1
-    assert rows[2].session_end.strftime("%H:%M") == "10:35"

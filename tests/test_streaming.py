@@ -341,6 +341,41 @@ def test_streaming_curation_dedups_content_across_batches(
         (0, 50), (1, 50), (2, 20)]
 
 
+def test_streaming_curation_matches_batch_curation_totals(spark, sf_dir):
+    """curate_doc_stream over the documents table as a file stream yields
+    the corpus totals of the batch ``curation_pipeline`` query: chunks,
+    chunk tokens and kept documents. Totals, not per-source rows: when
+    exact duplicates span sources the two dedups may keep copies from
+    different sources, but every copy has the same tokens."""
+    from pyspark.sql import functions as F
+
+    from social_media_sentiment_analysis_spark.queries.llmdata import (
+        q_curation_pipeline,
+    )
+    from social_media_sentiment_analysis_spark.sources.batch import (
+        load_table_stream,
+    )
+    from social_media_sentiment_analysis_spark.streaming.curation import (
+        curate_doc_stream,
+    )
+
+    stream = load_table_stream(spark, sf_dir, "documents").withColumn(
+        "ts", F.to_timestamp(F.lit("2024-01-15 10:00:00")))
+    name = f"curpar_{uuid.uuid4().hex[:8]}"
+    q = _mem_query(curate_doc_stream(stream), name)
+    q.awaitTermination(120)
+    streamed = spark.table(name).agg(
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.sum("chunk_tokens").alias("total_tokens"),
+        F.countDistinct("doc_id").alias("n_docs")).first()
+    batch = q_curation_pipeline(spark, sf_dir).agg(
+        F.sum("n_chunks").alias("n_chunks"),
+        F.sum("total_tokens").alias("total_tokens"),
+        F.sum("n_docs").alias("n_docs")).first()
+    assert batch.n_chunks > 0
+    assert streamed.asDict() == batch.asDict()
+
+
 def test_upsert_sink_update_mode_rollup(spark, tmp_path_factory):
     """upsert_parquet_sink: an update-mode aggregate stream keeps exactly
     one latest row per key as later batches revise earlier groups."""

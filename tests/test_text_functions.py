@@ -99,45 +99,6 @@ class TestRedact:
         assert _one(spark, "no pii here", redact(F.col("t"))) == "no pii here"
 
 
-class TestChunkUDTF:
-    """The UDTF chunker must agree row-for-row with the Column-algebra
-    chunker (q_chunk_documents) — the UDTF is the imperative template, the
-    Column plan the hot path."""
-
-    def test_udtf_matches_column_chunker(self, spark, sf_dir):
-        from social_media_sentiment_analysis_spark.functions.text import (
-            clean_text,
-        )
-        from social_media_sentiment_analysis_spark.functions.udtfs import (
-            register_udtfs,
-        )
-        from social_media_sentiment_analysis_spark.queries.llmdata import (
-            q_chunk_documents,
-        )
-        from social_media_sentiment_analysis_spark.sources.batch import (
-            load_table,
-        )
-
-        register_udtfs(spark)
-        load_table(spark, sf_dir, "documents") \
-            .withColumn("cleaned_text", clean_text(F.col("text"))) \
-            .createOrReplaceTempView("docs_for_udtf")
-        via_udtf = spark.sql("""
-            SELECT d.doc_id, c.chunk_id,
-                   CAST(c.n_tokens AS BIGINT) AS chunk_tokens,
-                   md5(c.chunk_text) AS chunk_fp
-            FROM docs_for_udtf d,
-                 LATERAL chunk_document(d.cleaned_text, 50) c
-        """).toPandas().sort_values(
-            ["doc_id", "chunk_id"]).reset_index(drop=True)
-        via_columns = q_chunk_documents(spark, sf_dir).toPandas() \
-            .sort_values(["doc_id", "chunk_id"]).reset_index(drop=True)
-        assert len(via_udtf) == len(via_columns) > 0
-        assert (via_udtf["chunk_fp"] == via_columns["chunk_fp"]).all()
-        assert (via_udtf["chunk_tokens"]
-                == via_columns["chunk_tokens"]).all()
-
-
 class TestBPE:
     """Distributed BPE must learn the exact merge list of the
     single-process reference on the same word-frequency table."""
